@@ -21,7 +21,8 @@ at ~10^7-10^8 hosts this is well distributed; the single pathological case
 applied map-side after the shuffle, so only B rows per host survive the
 stage. No global ordering is ever materialized; arrival seq is assigned
 per-round via range-partition + per-partition row_number + prefix-sum
-offsets (one reused exchange, no single-partition bottleneck, no Python).
+offsets (one materialized exchange, no single-partition bottleneck, no
+Python).
 """
 
 from __future__ import annotations
@@ -160,39 +161,50 @@ def assign_seq(
        yields ``(partition_id << 33) + intra-partition row index`` (the
        documented bit layout), so the local dense rank is
        ``mid - (pid << 33)`` — no window, no second full-row exchange;
-    3. per-partition counts shuffle ONE partial-agg row per partition; an
-       exclusive prefix sum over those ``n_parts`` rows (single-task
-       window over the tiny aggregate, not over the data) gives offsets;
-    4. broadcast-join offsets back: ``seq = base + offset + local_rank``.
+    3. that ranked frame is cached and ONE job materializes it while
+       counting its rows per partition (``n_parts`` rows to the driver);
+    4. ``seq = base + offset[pid] + local_rank``, the exclusive prefix
+       sums of those counts inlined as a literal array.
 
-    Counts are sort-invariant (partition sizes only), so the pruned
-    recompute of the range exchange in the counts branch cannot disagree
-    with the main branch. This replaces the former ``rdd.zipWithIndex``
-    implementation that serialized every row driver-format -> Python ->
-    JVM in the crawl round hot path.
+    Counts and ranks are read from the same materialized partitioning.
+    They cannot come from two executions of the range exchange: its
+    bounds are sampled per execution from an upstream whose row order is
+    not fixed, so two executions can split the rows differently (which
+    gave duplicate and missing seqs at 5k rows). This replaces the former
+    ``rdd.zipWithIndex`` implementation that serialized every row
+    driver-format -> Python -> JVM in the crawl round hot path.
+
+    Eager: the returned frame is cached and materialized and the ranked
+    frame is released; ``unpersist()`` the result when done with it.
     """
     spark = df.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     order = [F.col(c) for c in order_cols]
-    sdf = (
+    ranked = (
         df.repartitionByRange(n_parts, *order)
         .sortWithinPartitions(*order)
-        .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.spark_partition_id())
-    )
-    counts = sdf.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).cast("long").alias("_off")
-    )
-    return (
-        sdf.join(F.broadcast(offsets), "_pid")
         .withColumn(
-            seq_col,
-            F.lit(base).cast("long")
-            + F.col("_off")
-            + (F.col("_mid") - F.shiftleft(F.col("_pid").cast("long"), 33)),
+            "_rank",
+            F.monotonically_increasing_id()
+            - F.shiftleft(F.col("_pid").cast("long"), 33),
         )
-        .drop("_mid", "_pid", "_off")
+        .cache()
     )
+    counts = dict(ranked.groupBy("_pid").count().collect())
+    offsets, total = [], base
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(total)
+        total += counts.get(pid, 0)
+    offset = F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets or [0]]), F.col("_pid") + 1
+    )
+    out = (
+        ranked.withColumn(seq_col, offset + F.col("_rank"))
+        .drop("_pid", "_rank")
+        .cache()
+    )
+    out.count()
+    ranked.unpersist()
+    return out

@@ -16,10 +16,21 @@ Reference semantics (all /root/reference/src/crawler/crawler.cc):
 Pages-join model: a redirecting URL is a pages row whose ``redirect_to``
 column holds the Location header value (possibly relative — resolved
 against the current URL via the F9 merge_ref kernel, which is what curl
-does per RFC 7231 §7.1.2). Resolution is a driver-side loop of
-``max_redirs + 1`` bounded hash joins between the in-flight rows and the
-(src, location) redirect edge set — the loop bound is a protocol constant,
-not data-dependent, so the plan depth is fixed and every join distributes.
+does per RFC 7231 §7.1.2).
+
+Resolution runs in two parts:
+
+* ``prepare_redirect_edges`` — once per edge table: a hop only ever
+  leaves an edge's source, so each edge's next URL (merge_ref +
+  normalize of its Location against ``r_src``) and the REDIR_PROTOCOLS
+  check are functions of the edge alone. They are computed once, with
+  the edge set hash-partitioned by ``r_src``, and materialized;
+* ``resolve_redirect_chains`` — per batch of URLs: a driver-side loop of
+  at most ``max_redirs + 1`` hash joins between the in-flight rows and
+  the prepared edges, with no Python in the loop. Each hop is
+  materialized once and the loop stops as soon as no row is in flight,
+  so the number of hops follows the longest chain in the batch, capped
+  by the protocol constant.
 
 Intermediate-hop URLs are normalized before each join (the pages table is
 keyed by normalized URL); the reference normalizes only the final
@@ -28,11 +39,11 @@ URL parser, so the composed normalization is behavior-identical for URLs
 both engines accept.
 
 Scale notes (10^10 frontier): the redirect edge set is a projection of the
-pages table (two string columns); each of the ≤6 joins shuffles on the
-current effective URL — same key distribution as the frontier⋈pages
-content join, AQE handles skew. In-flight rows shrink monotonically (only
-rows that matched a redirect survive a hop), so hops 2..5 join a small
-fraction of the round.
+pages table (two string columns); each hop join shuffles only the
+in-flight rows on their current effective URL — same key distribution as
+the frontier⋈pages content join, AQE handles skew. In-flight rows shrink
+monotonically (only rows that matched a redirect survive a hop), so hops
+after the first join a small fraction of the batch.
 """
 
 from __future__ import annotations
@@ -43,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.url import BadUrl, Url
+from .materialize import checkpoint, release
 
 MAXREDIRS = 5  # crawler.cc:52
 CURLE_UNSUPPORTED_PROTOCOL = 1
@@ -106,6 +118,33 @@ def redirect_edges(pages: DataFrame) -> DataFrame:
     )
 
 
+def _follow_edges(edges: DataFrame) -> DataFrame:
+    """(r_src, r_dst) → (r_src, r_next): the URL one hop from ``r_src``,
+    null when the Location is unparseable or leaves http(s)."""
+    follow_udf = F.pandas_udf(follow_location_frame, _FOLLOW_TYPE)
+    ok = F.col("_n.next_url").isNotNull() & F.col("_n.scheme").isin("http", "https")
+    return edges.withColumn("_n", follow_udf("r_src", "r_dst")).select(
+        "r_src", F.when(ok, F.col("_n.next_url")).alias("r_next")
+    )
+
+
+def prepare_redirect_edges(edges: DataFrame) -> DataFrame:
+    """Prepare a (r_src, r_dst) edge table for ``resolve_redirect_chains``:
+    follow every edge once and hash-partition the result by ``r_src``.
+
+    The result is materialized here behind a ``materialize.checkpoint``
+    barrier that keeps its partitioning, so no hop join re-shuffles the
+    edge side (sharing the partitioning alone measured ~1.7x on the
+    5M-URL bench leg) or re-runs the follow kernel. The partition count
+    follows the session's parallelism. A caller that prepares a static
+    edge table keeps the result for the table's lifetime;
+    ``materialize.release`` frees it."""
+    n = edges.sparkSession.sparkContext.defaultParallelism
+    prepared = checkpoint(_follow_edges(edges).repartition(n, "r_src"))
+    prepared.count()
+    return prepared
+
+
 def resolve_redirect_chains(
     urls_df: DataFrame,
     redirects: DataFrame,
@@ -115,8 +154,10 @@ def resolve_redirect_chains(
     """Resolve every row's redirect chain to its effective URL.
 
     ``urls_df``: any DataFrame with normalized URLs in ``url_col`` (all
-    other columns ride along). ``redirects``: (r_src, r_dst) edges —
-    r_src normalized, r_dst a raw Location value.
+    other columns ride along). ``redirects``: the output of
+    ``prepare_redirect_edges``, or raw (r_src, r_dst) edges — r_src
+    normalized, r_dst a raw Location value — which are then followed
+    inside every hop.
 
     Returns the input columns plus:
       * ``eff_url``  — final URL reached (== ``url_col`` when no redirect;
@@ -124,68 +165,52 @@ def resolve_redirect_chains(
       * ``hops``     — redirects followed;
       * ``redirect_code`` — 0 ok, 47 too many redirects, 1 unsupported
         redirect protocol / unparseable Location.
+
+    Eager: each hop runs one job that materializes its rows behind a
+    ``materialize.checkpoint`` barrier (so the join executes once however
+    many branches read it) and counts the rows still in flight; the loop
+    ends when none are. The result is materialized the same way and the
+    per-hop blocks are released before returning; free the result with
+    ``materialize.release`` when done with it.
     """
-    follow_udf = F.pandas_udf(follow_location_frame, _FOLLOW_TYPE)
-    # hash-partition the edge table ONCE and materialize it: the
-    # checkpointed RDD keeps its outputPartitioning, so none of the
-    # max_redirs+1 hop joins re-shuffles the edge side again (measured
-    # ~1.7x on the 5M-URL bench leg — the active side shrinks
-    # geometrically but the edge side used to re-exchange every hop).
-    # Partition count follows the session's parallelism, not a constant.
-    redirects = redirects.repartition(
-        urls_df.sparkSession.sparkContext.defaultParallelism, "r_src"
-    ).localCheckpoint(eager=True)
+    if "r_next" not in redirects.columns:
+        redirects = _follow_edges(redirects)
+    in_flight = F.col("redirect_code").isNull()
     active = urls_df.withColumn("eff_url", F.col(url_col)).withColumn(
         "hops", F.lit(0)
     )
-    finished: list[DataFrame] = []
+    steps: list[DataFrame] = []
     for hop in range(max_redirs + 1):
-        # lazy localCheckpoint = a materialization barrier: each hop's
-        # join (and its Arrow-batched follow UDF) executes ONCE even
-        # though 2-3 union branches consume it — without the barrier
-        # every branch re-executes the whole shared lineage (measured 3x
-        # the UDF work at 1M URLs). Blocks spill to disk; storage is
-        # bounded by ~2x the input rows because the active set shrinks
-        # to the still-redirecting fraction each hop.
-        j = active.join(
-            redirects, active["eff_url"] == redirects["r_src"], "left"
-        ).localCheckpoint(eager=False)
-        finished.append(
-            j.filter(F.col("r_dst").isNull())
-            .drop("r_src", "r_dst")
-            .withColumn("redirect_code", F.lit(0))
-        )
-        matched = j.filter(F.col("r_dst").isNotNull())
+        code = F.when(F.col("r_src").isNull(), F.lit(0))
         if hop == max_redirs:
             # a pending hop #max_redirs+1 exceeds CURLOPT_MAXREDIRS
-            finished.append(
-                matched.drop("r_src", "r_dst").withColumn(
-                    "redirect_code", F.lit(CURLE_TOO_MANY_REDIRECTS)
-                )
+            code = code.otherwise(F.lit(CURLE_TOO_MANY_REDIRECTS))
+        else:
+            code = code.when(
+                F.col("r_next").isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)
             )
+        # a failing hop keeps the state before it; a followed hop advances
+        step = checkpoint(
+            active.join(redirects, active["eff_url"] == redirects["r_src"], "left")
+            .withColumn("redirect_code", code)
+            .withColumn(
+                "eff_url",
+                F.when(in_flight, F.col("r_next")).otherwise(F.col("eff_url")),
+            )
+            .withColumn("hops", F.col("hops") + in_flight.cast("int"))
+            .drop("r_src", "r_next")
+        )
+        steps.append(step)
+        if hop == max_redirs or step.filter(in_flight).count() == 0:
             break
-        stepped = (
-            matched.withColumn("_n", follow_udf("eff_url", "r_dst"))
-            .drop("r_src", "r_dst")
-            .localCheckpoint(eager=False)
-        )
-        ok = F.col("_n.next_url").isNotNull() & F.col("_n.scheme").isin(
-            "http", "https"
-        )
-        finished.append(
-            stepped.filter(~ok)
-            .drop("_n")
-            .withColumn("redirect_code", F.lit(CURLE_UNSUPPORTED_PROTOCOL))
-        )
-        active = (
-            stepped.filter(ok)
-            .withColumn("eff_url", F.col("_n.next_url"))
-            .withColumn("hops", F.col("hops") + 1)
-            .drop("_n")
-        )
-    out = finished[0]
-    for part in finished[1:]:
-        out = out.unionByName(part)
+        active = step.filter(in_flight)
+    out = steps[0].filter(~in_flight)
+    for step in steps[1:]:
+        out = out.unionByName(step.filter(~in_flight))
+    out = checkpoint(out)
+    out.count()
+    for step in steps:
+        release(step)
     return out
 
 

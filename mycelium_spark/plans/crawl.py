@@ -22,6 +22,15 @@ Parity mapping:
   the Mongo upsert (Doc.cc:79) becomes Iceberg MERGE at scale, or
   ``row_number() OVER (PARTITION BY url ORDER BY round DESC) = 1`` on read.
 
+Execution: static inputs — the parsed robots rules and the followed,
+partitioned redirect edges — are prepared once per engine. Within a round,
+each intermediate with more than one consumer (the robots-gated schedule,
+the resolved chains, the fetched + extracted working set, links, the new
+frontier rows, ``next_frontier``, ``new_seen``) executes exactly once
+behind a ``materialize.checkpoint`` barrier; the round's stats are read
+from those frames, the commits write from them, and the round releases
+them all before it returns.
+
 Checkpoint/resume: every table commit is an atomic snapshot (see
 sources/catalog.py); the round counter lives in the frontier table's
 snapshot metadata. Kill the driver between rounds and a new engine resumes
@@ -46,7 +55,12 @@ from pyspark.sql.types import BooleanType
 from ..functions.robots import Robots, RobotsState, robots_state_for
 from ..functions.udfs import EXTRACT_TYPE, extract_frame, normalize_url_series, url_parts_frame, URL_PARTS_TYPE
 from ..operators.frontier import assign_seq, politeness_schedule, with_worker_bucket
-from ..operators.redirects import redirect_edges, resolve_redirect_chains
+from ..operators.materialize import checkpoint, release
+from ..operators.redirects import (
+    prepare_redirect_edges,
+    redirect_edges,
+    resolve_redirect_chains,
+)
 from ..operators.seen import BloomSeen, new_urls
 from ..sources.catalog import Catalog
 
@@ -118,10 +132,11 @@ class CrawlEngine:
         # Redirect support (crawler.cc:52,862-868,1094-1096): active iff the
         # pages table carries a ``redirect_to`` column (the Location header
         # of 3xx rows). Redirect rows are edges, not content — the content
-        # join sees only non-redirecting rows.
+        # join sees only non-redirecting rows. The edge table is static:
+        # it is followed, partitioned and materialized once per engine.
         self.has_redirects = "redirect_to" in pages.columns
         if self.has_redirects:
-            self.redirects = redirect_edges(pages)
+            self.redirects = prepare_redirect_edges(redirect_edges(pages))
             self.content_pages = pages.filter(
                 F.col("redirect_to").isNull()
             ).drop("redirect_to")
@@ -151,8 +166,7 @@ class CrawlEngine:
             if use_bloom
             else None
         )
-        self._udfs_ready = False
-        # robots_rules: parsed + cached + broadcast at gate time.
+        # robots_rules: parsed + materialized once, broadcast at gate time.
         # Sources, in precedence order:
         #   robots_fixtures — explicit (host, status, robots_txt) rows
         #     (kept for tests / injected corpora);
@@ -184,7 +198,7 @@ class CrawlEngine:
                 self.bloom.add_df(seen, "url")
 
     def _parse_robots(self, rows: DataFrame) -> DataFrame:
-        """(host, status, robots_txt) → cached (host, state, groups_json)."""
+        """(host, status, robots_txt) → materialized (host, state, groups_json)."""
         from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
         schema = StructType(
@@ -195,7 +209,9 @@ class CrawlEngine:
             ]
         )
         exact = self.exact_robots
-        return rows.mapInPandas(lambda it: parse_robots_rows(it, exact), schema).cache()
+        rules = rows.mapInPandas(lambda it: parse_robots_rows(it, exact), schema).cache()
+        rules.count()
+        return rules
 
     # --- seeding (S1 ingest parity: absolute + http only, crawler.cc:1297) ---
     def seed(self, seed_rows: list[tuple[int, str]]) -> int:
@@ -215,16 +231,19 @@ class CrawlEngine:
             .select("url", "host", F.col("in_seq"))
         )
         # classifier never dedups, but frontier-as-set does (engine semantics:
-        # identical final docs, deduped fetches — documented divergence)
+        # identical final docs, deduped fetches — documented divergence);
+        # the first arrival of a url keeps its place
         fresh = new_urls(parsed, self.cat.read("seen"), None, "url")
-        fresh = fresh.dropDuplicates(["url"])
-        frontier = assign_seq(fresh.select("url", "host", "in_seq"), ["in_seq"], 0).drop(
-            "in_seq"
-        )
+        fresh = fresh.groupBy("url").agg(
+            F.min(F.struct("in_seq", "host")).alias("a")
+        ).select("url", "a.host", "a.in_seq")
+        frontier = assign_seq(fresh, ["in_seq"], 0)
         n = frontier.count()
         self.cat.commit(
-            "frontier", frontier, mode="overwrite", meta={"round": 0, "next_seq": n, "rows": n}
+            "frontier", frontier.drop("in_seq"), mode="overwrite",
+            meta={"round": 0, "next_seq": n, "rows": n},
         )
+        frontier.unpersist()
         return n
 
     def add_seeds(self, parsed: DataFrame) -> int:
@@ -242,7 +261,7 @@ class CrawlEngine:
         if existing is not None:
             cand = cand.join(existing.select("url"), "url", "left_anti")
         cand = new_urls(cand, self.cat.read("seen"), None, "url")
-        fresh = assign_seq(cand, ["url"], next_seq).cache()
+        fresh = assign_seq(cand, ["url"], next_seq)
         n_new = fresh.count()
         out = fresh if existing is None else existing.unionByName(fresh)
         self.cat.commit(
@@ -340,9 +359,10 @@ class CrawlEngine:
     def round(self) -> int:
         return int(self.cat.meta("frontier").get("round", 0))
 
-    def _robots_gate(self, scheduled: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def _robots_gate(self, scheduled: DataFrame) -> DataFrame:
+        """``scheduled`` plus a boolean ``allowed`` column."""
         if self.robots_rules is None:
-            return scheduled, scheduled.limit(0)
+            return scheduled.withColumn("allowed", F.lit(True))
         exact = self.exact_robots
         ua = self.user_agent
 
@@ -371,15 +391,12 @@ class CrawlEngine:
 
         allowed_udf = F.pandas_udf(allowed_fn, BooleanType())
         parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
-        gated = (
+        return (
             scheduled.join(F.broadcast(self.robots_rules), "host", "left")
             .withColumn("path", parts_udf("url").getField("path"))
             .withColumn("allowed", allowed_udf("path", "state", "groups_json"))
             .drop("state", "groups_json", "path")
         )
-        return gated.filter(F.col("allowed")).drop("allowed"), gated.filter(
-            ~F.col("allowed")
-        ).drop("allowed")
 
     def _host_budgets(self, rnd: int) -> DataFrame:
         """(host, _budget) from parsed robots Crawl-delay for our UA —
@@ -423,7 +440,19 @@ class CrawlEngine:
         )
 
     def run_round(self) -> dict:
-        """Execute one crawl round; returns stats. No-op if frontier empty."""
+        """Execute one crawl round; returns stats. No-op if frontier empty.
+
+        Each intermediate read by more than one consumer is held: it
+        executes once behind a ``materialize.checkpoint`` barrier, and
+        every held frame is released before the round returns."""
+        held: list[DataFrame] = []
+        try:
+            return self._run_round(held)
+        finally:
+            for df in held:
+                release(df)
+
+    def _run_round(self, held: list[DataFrame]) -> dict:
         r = self.round
         meta = self.cat.meta("frontier")
         next_seq = int(meta.get("next_seq", 0))
@@ -432,11 +461,16 @@ class CrawlEngine:
         frontier = self.cat.read("frontier")
         if frontier is None:
             return {"round": r, "scheduled": 0, "done": True}
-        frontier = frontier.cache()
+
+        def hold(df: DataFrame) -> DataFrame:
+            held.append(checkpoint(df))
+            return held[-1]
+
+        frontier = hold(frontier)
 
         # 1. politeness budget (optionally Crawl-delay-scaled per host)
         if self.enforce_crawl_delay and self.robots_rules is not None:
-            budgets = self._host_budgets(r)
+            budgets = hold(self._host_budgets(r))
             gated_frontier = frontier.join(F.broadcast(budgets), "host", "left").withColumn(
                 "_budget", F.coalesce(F.col("_budget"), F.lit(self.per_host_budget))
             )
@@ -445,109 +479,93 @@ class CrawlEngine:
             )
         else:
             scheduled, deferred = politeness_schedule(frontier, self.per_host_budget)
-        scheduled = scheduled.cache()
 
-        # 2. robots gate
-        allowed, disallowed = self._robots_gate(scheduled)
+        # 2. robots gate: one job runs the gate UDFs and yields both counts
+        gated = hold(self._robots_gate(scheduled))
+        n_scheduled, n_disallowed = gated.agg(
+            F.count(F.lit(1)), F.sum((~F.col("allowed")).cast("int"))
+        ).first()
+        n_disallowed = n_disallowed or 0
 
         # 3. "fetch": join against pages on normalized url; HEAD folds into
         # column pruning; politeness affinity + hot-host salting
-        allowed = with_worker_bucket(allowed, self.n_buckets)
+        allowed = with_worker_bucket(
+            gated.filter(F.col("allowed")).drop("allowed"), self.n_buckets
+        )
         # 3a. redirect-chain resolution (crawler.cc:52,1094-1096): the
         # content lives at the chain's effective URL; cap/protocol
         # failures become curl-code stubs like every other fetch failure
         if self.has_redirects:
-            # cached: the resolution plan (≤6 joins) feeds the content
-            # join, the failure stubs, the seen extras and the frontier
-            # anti-join — materialize it once
-            resolved = resolve_redirect_chains(allowed, self.redirects).cache()
-            redirect_failed = resolved.filter(F.col("redirect_code") != 0)
-            allowed = resolved.filter(F.col("redirect_code") == 0).drop(
-                "redirect_code", "hops"
-            )
+            resolved = resolve_redirect_chains(allowed, self.redirects)
+            held.append(resolved)
         else:
-            resolved = None
-            redirect_failed = None
-            allowed = allowed.withColumn("eff_url", F.col("url"))
-        fetched = allowed.join(
-            self.content_pages.withColumnRenamed("url", "_page_url"),
-            allowed["eff_url"] == F.col("_page_url"),
+            resolved = allowed.withColumn("eff_url", F.col("url")).withColumn(
+                "redirect_code", F.lit(0)
+            )
+        # 3b. the working set: one row per fetched url, content joined only
+        # for chains that resolved; failed chains keep a null html
+        pages = self.content_pages.select(
+            F.col("url").alias("_page_url"), "warc_ts", "lang", "html"
+        )
+        fetched = resolved.join(
+            pages,
+            (resolved["eff_url"] == pages["_page_url"])
+            & (resolved["redirect_code"] == 0),
             "left",
-        ).drop("_page_url")
+        ).withColumn("html_len", F.octet_length("html"))
+        ok = F.col("html").isNotNull() & (F.col("html_len") <= CONTENT_SIZE_LIMIT)
 
+        # 4. extract (the §2.3 kernel over Arrow batches), run only on
+        # content within the 1 MiB cap. Relative links resolve against the
+        # EFFECTIVE URL — that is where the bytes came from. (The reference
+        # stores eff_url in the Doc, Doc.cc:29-30, but never feeds it back
+        # into indexing; its frontier is ingest-fed, so link-base choice
+        # has no analog there.)
         extract_udf = F.pandas_udf(extract_frame, EXTRACT_TYPE)
-        fetched = fetched.withColumn("html_len", F.octet_length("html"))
-        ok = fetched.filter(
-            F.col("html").isNotNull() & (F.col("html_len") <= CONTENT_SIZE_LIMIT)
+        work = hold(
+            fetched.select(
+                "url", "seq", "eff_url", "warc_ts", "lang", "html_len",
+                # fetch failures still produce doc stubs (crawler.cc:974-999):
+                # chain cap / bad redirect protocol (47 / 1) fail the
+                # transfer; no pages row → 6 (CURLE_COULDNT_RESOLVE_HOST);
+                # over the cap → 42 (CURLE_ABORTED_BY_CALLBACK)
+                F.when(F.col("redirect_code") != 0, F.col("redirect_code"))
+                .when(F.col("html").isNull(), F.lit(6))
+                .when(~ok, F.lit(42))
+                .otherwise(F.lit(0))
+                .alias("curl_code"),
+                extract_udf(F.when(ok, F.col("html")), "eff_url").alias("ex"),
+            )
         )
-        missing = fetched.filter(F.col("html").isNull())
-        toobig = fetched.filter(
-            F.col("html").isNotNull() & (F.col("html_len") > CONTENT_SIZE_LIMIT)
-        )
-
-        # 4. extract (the §2.3 kernel over Arrow batches). Relative links
-        # resolve against the EFFECTIVE URL — that is where the bytes came
-        # from. (The reference stores eff_url in the Doc, Doc.cc:29-30,
-        # but never feeds it back into indexing; its frontier is
-        # ingest-fed, so link-base choice has no analog there.)
-        extracted = ok.withColumn("ex", extract_udf("html", "eff_url")).cache()
+        n_docs = work.count()
+        content = F.col("curl_code") == 0
+        extracted = work.filter(content)
         # eff_url is stamped only when it differs (crawler.cc:867-868)
         eff_stamp = F.when(
             F.col("eff_url") != F.col("url"), F.col("eff_url")
         ).alias("eff_url")
-        docs = extracted.select(
+        docs = work.select(
             "url",
             eff_stamp,
             F.lit(r).alias("round"),
-            F.lit(200).alias("http_code"),
-            F.lit(0).alias("curl_code"),
-            F.col("warc_ts").alias("modified"),
-            F.col("lang"),
-            F.col("html_len"),
-            F.col("ex.text").alias("text"),
-            F.col("ex.title").alias("title"),
-            F.col("ex.charset").alias("charset"),
-            F.col("ex.rss").alias("rss"),
-            F.col("ex.rss2").alias("rss2"),
-            F.col("ex.atom").alias("atom"),
-            F.col("ex.meta_index").alias("meta_index"),
-            F.col("ex.meta_follow").alias("meta_follow"),
-            F.col("ex.n_warnings").alias("n_warnings"),
+            # 42 keeps the 200 it got before the cap; the other stubs have
+            # no status (the reference would carry the last 3xx seen for
+            # 47 / 1, a per-hop status our pages model does not record)
+            F.when(F.col("curl_code").isin(0, 42), F.lit(200))
+            .otherwise(F.lit(0))
+            .alias("http_code"),
+            "curl_code",
+            F.when(content, F.col("warc_ts")).alias("modified"),
+            *[F.when(content, F.col(c)).alias(c) for c in ("lang", "html_len")],
+            *[
+                F.when(content, F.col(f"ex.{c}")).alias(c)
+                for c in ("text", "title", "charset", "rss", "rss2", "atom",
+                          "meta_index", "meta_follow", "n_warnings")
+            ],
         )
-        # fetch failures still produce doc stubs (crawler.cc:974-999)
-        stub_cols = [
-            "lang", "html_len", "text", "title", "charset", "rss", "rss2",
-            "atom", "meta_index", "meta_follow", "n_warnings", "modified",
-        ]
-        stubs = (
-            missing.select(
-                "url", eff_stamp, F.lit(r).alias("round"), F.lit(0).alias("http_code"),
-                F.lit(6).alias("curl_code"),  # CURLE_COULDNT_RESOLVE_HOST
-            ).unionByName(
-                toobig.select(
-                    "url", eff_stamp, F.lit(r).alias("round"), F.lit(200).alias("http_code"),
-                    F.lit(42).alias("curl_code"),  # CURLE_ABORTED_BY_CALLBACK
-                )
-            )
-        )
-        if redirect_failed is not None:
-            # chain cap / bad redirect protocol: curl fails the transfer
-            # (47 / 1); http_code 0 — the engine's failure-stub convention
-            # (the reference would carry the last 3xx seen, a per-hop
-            # status our pages model does not record)
-            stubs = stubs.unionByName(
-                redirect_failed.select(
-                    "url", eff_stamp, F.lit(r).alias("round"),
-                    F.lit(0).alias("http_code"),
-                    F.col("redirect_code").alias("curl_code"),
-                )
-            )
-        for c in stub_cols:
-            stubs = stubs.withColumn(c, F.lit(None).cast(dict(docs.dtypes)[c]))
-        docs = docs.unionByName(stubs.select(*docs.columns))
 
         # 5. links table
-        links = (
+        links = hold(
             extracted.select(
                 F.col("url").alias("src"),
                 F.col("seq").alias("src_seq"),
@@ -557,7 +575,7 @@ class CrawlEngine:
             .filter(F.col("url").startswith("http:"))  # F11 ingest parity
             .withColumn("round", F.lit(r))
         )
-        links = links.cache()
+        n_links = links.count()
 
         # 6. next frontier = links ∖ (seen ∪ scheduled), deduped, FIFO-seq'd
         seen = self.cat.read("seen")
@@ -569,28 +587,35 @@ class CrawlEngine:
         # anti-join against the WHOLE current frontier (scheduled + deferred):
         # a link may point at a URL still queued behind the politeness budget
         cand = cand.join(frontier.select("url"), "url", "left_anti")
+        # a link to this round's redirect TARGET is already crawled — its
+        # content just landed under the requesting doc's eff_url. Only
+        # chains that actually YIELDED content suppress the target: a chain
+        # ending in a fetch-failure stub (curl 6/42) leaves the target
+        # fetchable, so a later direct link gets its own doc row (the
+        # reference stubs per requested URL).
+        targets = extracted.filter(F.col("eff_url") != F.col("url")).select(
+            F.col("eff_url").alias("url")
+        )
         if self.has_redirects:
-            # a link to this round's redirect TARGET is already crawled —
-            # its content just landed under the requesting doc's eff_url.
-            # Only chains that actually YIELDED content suppress the
-            # target: a chain ending in a fetch-failure stub (curl 6/42)
-            # leaves the target fetchable, so a later direct link gets its
-            # own doc row (the reference stubs per requested URL).
-            cand = cand.join(
-                extracted.filter(F.col("eff_url") != F.col("url")).select(
-                    F.col("eff_url").alias("url")
-                ),
-                "url",
-                "left_anti",
-            )
-        fresh = new_urls(cand, seen, self.bloom, "url")
+            cand = cand.join(targets, "url", "left_anti")
         parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
-        fresh = fresh.withColumn("host", parts_udf("url").getField("host"))
+        # held: the range exchange in assign_seq samples its input in a
+        # job of its own, which would re-run the Bloom and host UDFs
+        fresh = hold(
+            new_urls(cand, seen, self.bloom, "url").withColumn(
+                "host", parts_udf("url").getField("host")
+            )
+        )
         new_frontier = assign_seq(
             fresh.select("url", "host", "src_seq", "pos"), ["src_seq", "pos", "url"], next_seq
-        ).drop("src_seq", "pos")
-        # cached: consumed twice below (count for the meta + the actual write)
-        next_frontier = deferred.select("url", "host", "seq").unionByName(new_frontier).cache()
+        )
+        next_frontier = hold(
+            deferred.select("url", "host", "seq").unionByName(
+                new_frontier.drop("src_seq", "pos")
+            )
+        )
+        n_next = next_frontier.count()
+        new_frontier.unpersist()
 
         # 7. metrics: per-partition lineage (A3/P12)
         part_metrics = (
@@ -605,57 +630,39 @@ class CrawlEngine:
             .withColumn("stage", F.lit("extract"))
         )
 
-        # 8. commit (stats first — forces the plans exactly once via cache)
-        n_scheduled = scheduled.count()
-        n_disallowed = disallowed.count()
-        n_docs = docs.count()
-        n_links = links.count()
-        new_seen = scheduled.select("url")
+        # 8. seen: every scheduled url (disallowed ones too, popped without
+        # fetch) plus, with redirects, BOTH ends of a followed chain — a
+        # redirect target already crawled must not be refetched when linked
+        # directly. Extras come only from chains that yielded content: a
+        # chain ending in a fetch-failure stub leaves its target unseen so
+        # a direct link later records a doc row for it. Deduped against the
+        # WHOLE current frontier (a target still queued behind the
+        # politeness budget enters seen via `scheduled` when its turn
+        # comes, not twice) and the committed seen table (same
+        # Bloom-prefilter + exact-anti path as link candidates) so seen
+        # stays duplicate-free.
+        new_seen = gated.select("url")
         if self.has_redirects:
-            # BOTH ends of a followed chain enter the seen set: the
-            # requested URL and the effective URL (a redirect target
-            # already crawled must not be refetched when linked directly).
-            # Extras come only from chains that yielded content
-            # (``extracted``): a chain ending in a fetch-failure stub
-            # leaves its target unseen so a direct link later records a
-            # doc row for it. Deduped against the WHOLE current frontier
-            # (scheduled + deferred — a target still queued behind the
-            # politeness budget enters seen via `scheduled` when its turn
-            # comes, not twice) and the committed seen table (same
-            # Bloom-prefilter + exact-anti path as link candidates) so
-            # seen stays duplicate-free.
-            extras = (
-                extracted.filter(F.col("eff_url") != F.col("url"))
-                .select(F.col("eff_url").alias("url"))
-                .distinct()
-                .join(frontier.select("url"), "url", "left_anti")
-            )
-            new_seen = new_seen.unionByName(
-                new_urls(extras, seen, self.bloom, "url")
-            )
+            extras = targets.distinct().join(frontier.select("url"), "url", "left_anti")
+            new_seen = new_seen.unionByName(new_urls(extras, seen, self.bloom, "url"))
+        new_seen = hold(new_seen)
         if self.bloom is not None:
             self.bloom.add_df(new_seen, "url")
-            # quiescent point for version GC: every plan built against an
-            # older filter version has been executed by the counts above
+            # quiescent point for version GC: every frame built against an
+            # older filter version has been materialized above
             self.bloom.expire(keep=2)
+
+        # 9. commit, frontier last: its meta carries the round counter
         self.cat.commit("docs", docs, mode="append", meta={"round": r})
         self.cat.commit("links", links.drop("src_seq"), mode="append", meta={"round": r})
         self.cat.commit("seen", new_seen, mode="append", meta={"round": r})
         self.cat.commit("metrics", part_metrics, mode="append", meta={"round": r})
-        n_next = next_frontier.count()
         self.cat.commit(
             "frontier",
             next_frontier,
             mode="overwrite",
             meta={"round": r + 1, "next_seq": next_seq + n_next, "rows": n_next},
         )
-        frontier.unpersist()
-        scheduled.unpersist()
-        if resolved is not None:
-            resolved.unpersist()
-        extracted.unpersist()
-        links.unpersist()
-        next_frontier.unpersist()
         return {
             "round": r,
             "scheduled": n_scheduled,

@@ -8,6 +8,8 @@ Asserts the north-rule invariants at small scale:
   produces the identical final state.
 """
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 N_PAGES = 150
+ROUND_JOBS = 33  # jobs of one round of this fixture (test_round_job_count)
 
 
 @pytest.fixture(scope="module")
@@ -127,3 +130,73 @@ def test_dangling_links_get_fetch_failure_stubs(crawled):
     stubs = docs.filter(F.col("curl_code") == 6)
     assert stubs.count() > 0
     assert stubs.filter(F.col("text").isNotNull()).count() == 0
+
+
+def _persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs holding blocks (caches and checkpoints)."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def stepped(spark, corpus, tmp_path_factory):
+    """A second engine over the `crawled` inputs, driven one round at a
+    time: per-round stats, the ids of persisted RDDs before and after each
+    round, and the job count of round 0 under its own job group."""
+    pages, robots = corpus
+    eng = make_engine(spark, tmp_path_factory.mktemp("w5"), pages, robots)
+    eng.seed(synth.seeds(N_PAGES))
+    sc = spark.sparkContext
+    stats, blocks, jobs = [], [], None
+    for r in range(6):
+        before = _persisted_rdds(spark)
+        if r == 0:
+            sc.setJobGroup("round0", "one crawl round")
+        try:
+            s = eng.run_round()
+        finally:
+            if r == 0:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                jobs = _jobs_in_group(spark, "round0")
+        blocks.append((before, _persisted_rdds(spark)))
+        stats.append(s)
+        if s.get("done"):
+            break
+    return eng, stats, blocks, jobs
+
+
+def _table(eng, name):
+    return Counter(tuple(r) for r in eng.cat.read(name).collect())
+
+
+def test_rounds_are_deterministic(crawled, stepped):
+    """Identical inputs → identical per-round stats and identical
+    frontier (url, seq), seen and docs tables."""
+    eng1, _, stats1 = crawled
+    eng2, stats2, _, _ = stepped
+    assert len(stats1) >= 3
+    assert stats2 == stats1
+    for table in ("frontier", "seen", "docs"):
+        assert _table(eng2, table) == _table(eng1, table), table
+
+
+def test_round_releases_its_blocks(stepped):
+    """Everything a round materializes is released when it ends."""
+    _, _, blocks, _ = stepped
+    assert len(blocks) >= 3
+    for before, after in blocks:
+        assert after <= before
+
+
+def test_round_job_count(stepped):
+    """Re-execution guard: each shared intermediate of a round runs once,
+    so one round of this fixture issues a fixed number of Spark jobs.
+    A change here means the round's plan changed; re-pin it only after
+    checking that no intermediate is executed twice."""
+    _, _, _, jobs = stepped
+    assert jobs == ROUND_JOBS

@@ -9,7 +9,8 @@
 * BOTH chain ends enter the seen set: a later link to the redirect target
   is not refetched; seen stays duplicate-free;
 * the synthetic corpus with with_redirects=True keeps the byte-identity
-  invariant through chains.
+  invariant through chains;
+* resolution stops hopping once no chain is in flight.
 """
 
 import datetime
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from mycelium_spark.operators.redirects import (
     CURLE_TOO_MANY_REDIRECTS,
     CURLE_UNSUPPORTED_PROTOCOL,
+    prepare_redirect_edges,
     resolve_redirect_chains,
 )
 from mycelium_spark.plans.crawl import CrawlEngine
@@ -184,6 +186,50 @@ def test_resolver_unit(spark):
     assert out["http://plain.example/p"]["eff_url"] == "http://plain.example/p"
 
 
+def _resolve_jobs(spark, urls, edges, group):
+    """Resolve under a job group; returns ({url: row}, jobs issued)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = resolve_redirect_chains(urls, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rows = {r["url"]: r for r in out.collect()}
+    out.unpersist()
+    return rows, jobs
+
+
+def test_short_chains_stop_hopping_early(spark):
+    """The hop loop ends once no row is in flight: a batch whose longest
+    chain is one redirect runs fewer hops (so fewer jobs) than a batch
+    holding an over-cap chain, and the results are unchanged."""
+    edges = prepare_redirect_edges(
+        spark.createDataFrame(
+            [("http://s.example/0", "http://s.example/1")]
+            + [(f"http://l.example/{i}", f"http://l.example/{i + 1}") for i in range(6)],
+            "r_src string, r_dst string",
+        )
+    )
+    short = spark.createDataFrame(
+        [("http://s.example/0",), ("http://plain.example/p",)], "url string"
+    )
+    rows, short_jobs = _resolve_jobs(spark, short, edges, "short-chains")
+    assert rows["http://s.example/0"]["eff_url"] == "http://s.example/1"
+    assert rows["http://s.example/0"]["hops"] == 1
+    assert rows["http://s.example/0"]["redirect_code"] == 0
+    assert rows["http://plain.example/p"]["hops"] == 0
+    long = short.union(spark.createDataFrame([("http://l.example/0",)], "url string"))
+    rows, long_jobs = _resolve_jobs(spark, long, edges, "over-cap-chain")
+    assert rows["http://s.example/0"]["hops"] == 1
+    assert rows["http://l.example/0"]["redirect_code"] == CURLE_TOO_MANY_REDIRECTS
+    assert rows["http://l.example/0"]["eff_url"] == "http://l.example/5"
+    assert rows["http://l.example/0"]["hops"] == 5
+    assert short_jobs < long_jobs
+    edges.unpersist()
+
+
 def test_synth_corpus_with_redirects(spark, tmp_path):
     n = 120
     pages = spark.createDataFrame(
@@ -194,7 +240,14 @@ def test_synth_corpus_with_redirects(spark, tmp_path):
         bloom_bits=1 << 16,
     )
     eng.seed(synth.seeds(n))
-    eng.run(max_rounds=5)
+    sc = spark.sparkContext
+    for _ in range(5):
+        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        s = eng.run_round()
+        # the round released every hop and intermediate it materialized
+        assert {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} <= before
+        if s.get("done"):
+            break
     docs = eng.cat.read("docs")
     # byte-identity through chains: text matches the EFFECTIVE URL's page
     ok = docs.filter((F.col("curl_code") == 0) & (F.col("http_code") == 200))
