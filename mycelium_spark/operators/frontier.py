@@ -174,8 +174,9 @@ def assign_seq(
     ``rdd.zipWithIndex`` implementation that serialized every row
     driver-format -> Python -> JVM in the crawl round hot path.
 
-    Eager: the returned frame is cached and materialized and the ranked
-    frame is released; ``unpersist()`` the result when done with it.
+    Eager: the ranked frame is materialized here and the result is a
+    projection over it; free it with ``materialize.release`` on the
+    result when done with it.
     """
     spark = df.sparkSession
     if n_parts is None:
@@ -200,11 +201,4 @@ def assign_seq(
     offset = F.element_at(
         F.array(*[F.lit(o).cast("long") for o in offsets or [0]]), F.col("_pid") + 1
     )
-    out = (
-        ranked.withColumn(seq_col, offset + F.col("_rank"))
-        .drop("_pid", "_rank")
-        .cache()
-    )
-    out.count()
-    ranked.unpersist()
-    return out
+    return ranked.withColumn(seq_col, offset + F.col("_rank")).drop("_pid", "_rank")

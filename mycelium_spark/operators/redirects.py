@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.url import BadUrl, Url
-from .materialize import checkpoint, release
+from .materialize import release
 
 MAXREDIRS = 5  # crawler.cc:52
 CURLE_UNSUPPORTED_PROTOCOL = 1
@@ -132,17 +132,14 @@ def prepare_redirect_edges(edges: DataFrame) -> DataFrame:
     """Prepare a (r_src, r_dst) edge table for ``resolve_redirect_chains``:
     follow every edge once and hash-partition the result by ``r_src``.
 
-    The result is materialized here behind a ``materialize.checkpoint``
-    barrier that keeps its partitioning, so no hop join re-shuffles the
-    edge side (sharing the partitioning alone measured ~1.7x on the
-    5M-URL bench leg) or re-runs the follow kernel. The partition count
-    follows the session's parallelism. A caller that prepares a static
-    edge table keeps the result for the table's lifetime;
-    ``materialize.release`` frees it."""
+    The result is an eager local checkpoint, which keeps its
+    partitioning, so no hop join re-shuffles the edge side (sharing the
+    partitioning alone measured ~1.7x on the 5M-URL bench leg) or re-runs
+    the follow kernel. The partition count follows the session's
+    parallelism. A caller that prepares a static edge table keeps the
+    result for the table's lifetime; ``materialize.release`` frees it."""
     n = edges.sparkSession.sparkContext.defaultParallelism
-    prepared = checkpoint(_follow_edges(edges).repartition(n, "r_src"))
-    prepared.count()
-    return prepared
+    return _follow_edges(edges).repartition(n, "r_src").localCheckpoint()
 
 
 def resolve_redirect_chains(
@@ -156,8 +153,8 @@ def resolve_redirect_chains(
     ``urls_df``: any DataFrame with normalized URLs in ``url_col`` (all
     other columns ride along). ``redirects``: the output of
     ``prepare_redirect_edges``, or raw (r_src, r_dst) edges — r_src
-    normalized, r_dst a raw Location value — which are then followed
-    inside every hop.
+    normalized, r_dst a raw Location value — which are prepared here
+    for this call and released before it returns.
 
     Returns the input columns plus:
       * ``eff_url``  — final URL reached (== ``url_col`` when no redirect;
@@ -166,15 +163,18 @@ def resolve_redirect_chains(
       * ``redirect_code`` — 0 ok, 47 too many redirects, 1 unsupported
         redirect protocol / unparseable Location.
 
-    Eager: each hop runs one job that materializes its rows behind a
-    ``materialize.checkpoint`` barrier (so the join executes once however
-    many branches read it) and counts the rows still in flight; the loop
-    ends when none are. The result is materialized the same way and the
-    per-hop blocks are released before returning; free the result with
-    ``materialize.release`` when done with it.
+    Eager: each hop's rows sit behind a lazy local checkpoint (so the
+    join executes once however many branches read it), materialized by
+    the action that counts the rows still in flight; the loop ends when
+    none are. The result is a union over those hops; free their
+    blocks with ``materialize.release`` on the result when done with it.
     """
     if "r_next" not in redirects.columns:
-        redirects = _follow_edges(redirects)
+        prepared = prepare_redirect_edges(redirects)
+        try:
+            return resolve_redirect_chains(urls_df, prepared, max_redirs, url_col)
+        finally:
+            release(prepared)
     in_flight = F.col("redirect_code").isNull()
     active = urls_df.withColumn("eff_url", F.col(url_col)).withColumn(
         "hops", F.lit(0)
@@ -190,7 +190,7 @@ def resolve_redirect_chains(
                 F.col("r_next").isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)
             )
         # a failing hop keeps the state before it; a followed hop advances
-        step = checkpoint(
+        step = (
             active.join(redirects, active["eff_url"] == redirects["r_src"], "left")
             .withColumn("redirect_code", code)
             .withColumn(
@@ -199,18 +199,15 @@ def resolve_redirect_chains(
             )
             .withColumn("hops", F.col("hops") + in_flight.cast("int"))
             .drop("r_src", "r_next")
+            .localCheckpoint(eager=False)
         )
         steps.append(step)
-        if hop == max_redirs or step.filter(in_flight).count() == 0:
-            break
         active = step.filter(in_flight)
+        if active.count() == 0:
+            break
     out = steps[0].filter(~in_flight)
     for step in steps[1:]:
         out = out.unionByName(step.filter(~in_flight))
-    out = checkpoint(out)
-    out.count()
-    for step in steps:
-        release(step)
     return out
 
 

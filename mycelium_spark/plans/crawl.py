@@ -27,7 +27,7 @@ partitioned redirect edges — are prepared once per engine. Within a round,
 each intermediate with more than one consumer (the robots-gated schedule,
 the resolved chains, the fetched + extracted working set, links, the new
 frontier rows, ``next_frontier``, ``new_seen``) executes exactly once
-behind a ``materialize.checkpoint`` barrier; the round's stats are read
+behind a lazy local checkpoint; the round's stats are read
 from those frames, the commits write from them, and the round releases
 them all before it returns.
 
@@ -55,7 +55,7 @@ from pyspark.sql.types import BooleanType
 from ..functions.robots import Robots, RobotsState, robots_state_for
 from ..functions.udfs import EXTRACT_TYPE, extract_frame, normalize_url_series, url_parts_frame, URL_PARTS_TYPE
 from ..operators.frontier import assign_seq, politeness_schedule, with_worker_bucket
-from ..operators.materialize import checkpoint, release
+from ..operators.materialize import release
 from ..operators.redirects import (
     prepare_redirect_edges,
     redirect_edges,
@@ -238,12 +238,14 @@ class CrawlEngine:
             F.min(F.struct("in_seq", "host")).alias("a")
         ).select("url", "a.host", "a.in_seq")
         frontier = assign_seq(fresh, ["in_seq"], 0)
-        n = frontier.count()
-        self.cat.commit(
-            "frontier", frontier.drop("in_seq"), mode="overwrite",
-            meta={"round": 0, "next_seq": n, "rows": n},
-        )
-        frontier.unpersist()
+        try:
+            n = frontier.count()
+            self.cat.commit(
+                "frontier", frontier.drop("in_seq"), mode="overwrite",
+                meta={"round": 0, "next_seq": n, "rows": n},
+            )
+        finally:
+            release(frontier)
         return n
 
     def add_seeds(self, parsed: DataFrame) -> int:
@@ -262,14 +264,16 @@ class CrawlEngine:
             cand = cand.join(existing.select("url"), "url", "left_anti")
         cand = new_urls(cand, self.cat.read("seen"), None, "url")
         fresh = assign_seq(cand, ["url"], next_seq)
-        n_new = fresh.count()
-        out = fresh if existing is None else existing.unionByName(fresh)
-        self.cat.commit(
-            "frontier", out, mode="overwrite",
-            meta={"round": rnd, "next_seq": next_seq + n_new,
-                  "rows": int(meta.get("rows", 0)) + n_new},
-        )
-        fresh.unpersist()
+        try:
+            n_new = fresh.count()
+            out = fresh if existing is None else existing.unionByName(fresh)
+            self.cat.commit(
+                "frontier", out, mode="overwrite",
+                meta={"round": rnd, "next_seq": next_seq + n_new,
+                      "rows": int(meta.get("rows", 0)) + n_new},
+            )
+        finally:
+            release(fresh)
         return n_new
 
     def seed_from_sitemaps(self) -> int:
@@ -443,8 +447,8 @@ class CrawlEngine:
         """Execute one crawl round; returns stats. No-op if frontier empty.
 
         Each intermediate read by more than one consumer is held: it
-        executes once behind a ``materialize.checkpoint`` barrier, and
-        every held frame is released before the round returns."""
+        executes once behind a lazy local checkpoint, and every held
+        frame is released before the round returns."""
         held: list[DataFrame] = []
         try:
             return self._run_round(held)
@@ -463,7 +467,7 @@ class CrawlEngine:
             return {"round": r, "scheduled": 0, "done": True}
 
         def hold(df: DataFrame) -> DataFrame:
-            held.append(checkpoint(df))
+            held.append(df.localCheckpoint(eager=False))
             return held[-1]
 
         frontier = hold(frontier)
@@ -537,8 +541,19 @@ class CrawlEngine:
                 extract_udf(F.when(ok, F.col("html")), "eff_url").alias("ex"),
             )
         )
-        n_docs = work.count()
         content = F.col("curl_code") == 0
+        # one job materializes the working set and counts the docs and the
+        # links the links table (step 5) will keep
+        n_docs, n_links = work.agg(
+            F.count(F.lit(1)),
+            F.sum(
+                F.when(
+                    content,
+                    F.size(F.filter("ex.links", lambda l: l["url"].startswith("http:"))),
+                )
+            ),
+        ).first()
+        n_links = n_links or 0
         extracted = work.filter(content)
         # eff_url is stamped only when it differs (crawler.cc:867-868)
         eff_stamp = F.when(
@@ -575,7 +590,6 @@ class CrawlEngine:
             .filter(F.col("url").startswith("http:"))  # F11 ingest parity
             .withColumn("round", F.lit(r))
         )
-        n_links = links.count()
 
         # 6. next frontier = links ∖ (seen ∪ scheduled), deduped, FIFO-seq'd
         seen = self.cat.read("seen")
@@ -593,10 +607,10 @@ class CrawlEngine:
         # ending in a fetch-failure stub (curl 6/42) leaves the target
         # fetchable, so a later direct link gets its own doc row (the
         # reference stubs per requested URL).
-        targets = extracted.filter(F.col("eff_url") != F.col("url")).select(
-            F.col("eff_url").alias("url")
-        )
         if self.has_redirects:
+            targets = extracted.filter(F.col("eff_url") != F.col("url")).select(
+                F.col("eff_url").alias("url")
+            )
             cand = cand.join(targets, "url", "left_anti")
         parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
         # held: the range exchange in assign_seq samples its input in a
@@ -609,13 +623,13 @@ class CrawlEngine:
         new_frontier = assign_seq(
             fresh.select("url", "host", "src_seq", "pos"), ["src_seq", "pos", "url"], next_seq
         )
+        held.append(new_frontier)
         next_frontier = hold(
             deferred.select("url", "host", "seq").unionByName(
                 new_frontier.drop("src_seq", "pos")
             )
         )
         n_next = next_frontier.count()
-        new_frontier.unpersist()
 
         # 7. metrics: per-partition lineage (A3/P12)
         part_metrics = (

@@ -85,7 +85,10 @@ def test_seed_seqs_are_dense_in_input_order(spark, tmp_path):
     eng.cat.commit(
         "seen", spark.createDataFrame([(u,) for u in seen], "url string"), mode="append"
     )
+    before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
     assert eng.seed(seeds) == n_seeds
+    # seed() releases the ranked partitioning it materialized
+    assert {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()} <= before
     rows = eng.cat.read("frontier").select("url", "seq").collect()
     by_seq = sorted(rows, key=lambda r: r["seq"])
     assert [r["seq"] for r in by_seq] == list(range(n_seeds))

@@ -17,7 +17,7 @@ from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 N_PAGES = 150
-ROUND_JOBS = 33  # jobs of one round of this fixture (test_round_job_count)
+ROUND_JOBS = 28  # jobs of one round of this fixture (test_round_job_count)
 
 
 @pytest.fixture(scope="module")

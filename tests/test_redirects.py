@@ -18,6 +18,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from mycelium_spark.operators.materialize import release
 from mycelium_spark.operators.redirects import (
     CURLE_TOO_MANY_REDIRECTS,
     CURLE_UNSUPPORTED_PROTOCOL,
@@ -163,8 +164,14 @@ def test_redirect_target_not_refetched(spark, chain_pages, crawled):
     assert "http://c.example/end" in seen
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_resolver_unit(spark):
-    """resolve_redirect_chains standalone: hop counts and codes."""
+    """resolve_redirect_chains standalone: hop counts and codes. Raw
+    edges are prepared for the call and released by it."""
+    before = _persisted_rdds(spark)
     urls = spark.createDataFrame(
         [("http://x.example/0",), ("http://plain.example/p",)], "url string"
     )
@@ -175,10 +182,10 @@ def test_resolver_unit(spark):
         ],
         "r_src string, r_dst string",
     )
-    out = {
-        r["url"]: r
-        for r in resolve_redirect_chains(urls, edges).collect()
-    }
+    resolved = resolve_redirect_chains(urls, edges)
+    out = {r["url"]: r for r in resolved.collect()}
+    release(resolved)
+    assert _persisted_rdds(spark) <= before
     assert out["http://x.example/0"]["eff_url"] == "http://x.example/2"
     assert out["http://x.example/0"]["hops"] == 2
     assert out["http://x.example/0"]["redirect_code"] == 0
@@ -197,14 +204,16 @@ def _resolve_jobs(spark, urls, edges, group):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     rows = {r["url"]: r for r in out.collect()}
-    out.unpersist()
+    release(out)
     return rows, jobs
 
 
 def test_short_chains_stop_hopping_early(spark):
     """The hop loop ends once no row is in flight: a batch whose longest
     chain is one redirect runs fewer hops (so fewer jobs) than a batch
-    holding an over-cap chain, and the results are unchanged."""
+    holding an over-cap chain, and the results are unchanged. Releasing
+    the results and the prepared edges frees every block they held."""
+    before = _persisted_rdds(spark)
     edges = prepare_redirect_edges(
         spark.createDataFrame(
             [("http://s.example/0", "http://s.example/1")]
@@ -227,7 +236,8 @@ def test_short_chains_stop_hopping_early(spark):
     assert rows["http://l.example/0"]["eff_url"] == "http://l.example/5"
     assert rows["http://l.example/0"]["hops"] == 5
     assert short_jobs < long_jobs
-    edges.unpersist()
+    release(edges)
+    assert _persisted_rdds(spark) <= before
 
 
 def test_synth_corpus_with_redirects(spark, tmp_path):
@@ -240,12 +250,11 @@ def test_synth_corpus_with_redirects(spark, tmp_path):
         bloom_bits=1 << 16,
     )
     eng.seed(synth.seeds(n))
-    sc = spark.sparkContext
     for _ in range(5):
-        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        before = _persisted_rdds(spark)
         s = eng.run_round()
         # the round released every hop and intermediate it materialized
-        assert {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} <= before
+        assert _persisted_rdds(spark) <= before
         if s.get("done"):
             break
     docs = eng.cat.read("docs")
