@@ -32,6 +32,13 @@ Resolution runs in two parts:
   so the number of hops follows the longest chain in the batch, capped
   by the protocol constant.
 
+A chain is a function of its start URL, so over a static edge table the
+crawl engine runs both parts once, on the distinct ``r_src`` of the
+edges: the result is the table's chain closure, and resolving a batch is
+then one left join against it (a URL with no closure row does not
+redirect). Batch callers without a fixed edge table (the
+``redirect_resolve`` query, ``bench.py``) call the two parts directly.
+
 Intermediate-hop URLs are normalized before each join (the pages table is
 keyed by normalized URL); the reference normalizes only the final
 effective URL, but every Location curl follows passes through the same
@@ -132,12 +139,14 @@ def prepare_redirect_edges(edges: DataFrame) -> DataFrame:
     """Prepare a (r_src, r_dst) edge table for ``resolve_redirect_chains``:
     follow every edge once and hash-partition the result by ``r_src``.
 
-    The result is an eager local checkpoint, which keeps its
-    partitioning, so no hop join re-shuffles the edge side (sharing the
-    partitioning alone measured ~1.7x on the 5M-URL bench leg) or re-runs
-    the follow kernel. The partition count follows the session's
-    parallelism. A caller that prepares a static edge table keeps the
-    result for the table's lifetime; ``materialize.release`` frees it."""
+    The result is an eager local checkpoint, so no hop join re-runs the
+    follow kernel. Without adaptive execution the checkpoint keeps its
+    partitioning and no hop join re-shuffles the edge side; under
+    adaptive execution Spark 4.1 reports a checkpoint's partitioning as
+    unknown, so each hop join plans its own exchange. The partition count
+    follows the session's parallelism. A caller that prepares a static
+    edge table keeps the result for the table's lifetime;
+    ``materialize.release`` frees it."""
     n = edges.sparkSession.sparkContext.defaultParallelism
     return _follow_edges(edges).repartition(n, "r_src").localCheckpoint()
 

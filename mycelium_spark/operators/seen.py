@@ -6,12 +6,24 @@ north star: a Bloom filter over the seen set is built with JVM-side hashing
 aggregated distributed (shuffle scales with DISTINCT BITS, not with the
 bitmap or the set), merged and either broadcast (single shard) or spilled
 to per-shard bitmap files (sharded); candidate URLs are prefiltered with a
-vectorized numpy membership test and only the maybe-seen survivors pay the
-exact ``left_anti`` join.
+vectorized numpy membership test, evaluated ONCE per candidate row.
 
 The Bloom is strictly a PREFILTER: exact set parity is guaranteed by the
 confirm join (a Bloom positive never drops a truly-new URL silently, and
-Bloom negatives are definitively new).
+Bloom negatives are definitively new). The confirm is one ``left_anti``
+join on ``url = seen.url AND maybe_seen``: a Bloom negative fails that
+condition against every seen row, so it is kept, and a Bloom positive is
+kept only when no seen row has its url. The membership test
+runs once per candidate and never over the seen table (a left-only term
+of an anti-join condition is pushed into neither side; a ``maybe_seen``
+FILTER on the candidates, by contrast, is inferred through ``url = url``
+onto the seen side and evaluates the UDF over every seen row).
+
+Trade-off at scale: every candidate, Bloom-negative or not, takes part in
+the confirm join. Against a broadcast seen side that is one hash probe per
+row; once seen is too large to broadcast, the join shuffles all
+candidates with the seen table. ``confirm=False`` is the mode that keeps
+the seen table out of the plan entirely.
 
 Sharding (the 10^10 design point): at 10^10 seen URLs a single broadcast
 bitmap no longer fits (~12 GB at 10 bits/key). ``n_shards=K`` splits the
@@ -274,6 +286,13 @@ def new_urls(
 ) -> DataFrame:
     """candidates ∖ seen — Bloom prefilter + exact confirm anti-join.
 
+    The membership UDF (or the shard-local ``mapInPandas`` of a sharded
+    Bloom) is evaluated once per candidate row, inside this call's plan:
+    a caller whose result feeds several consumers materializes the RESULT,
+    not ``candidates``. The exact confirm is one ``left_anti`` join whose
+    condition carries ``maybe_seen``, so Bloom negatives are kept without
+    consulting seen and the UDF never runs over the seen table.
+
     ``confirm=False`` is the APPROXIMATE at-scale mode: Bloom-maybe rows
     are treated as seen without the confirm join, so the seen table is
     never shuffled at all — the dedup cost becomes O(candidates), not
@@ -285,13 +304,10 @@ def new_urls(
         return candidates
     if bloom is None:
         return candidates.join(seen.select(url_col), url_col, "left_anti")
-    # NOTE: both branches recompute the membership UDF (cheap, vectorized);
-    # caching here would pin candidate-sized data across caller actions and
-    # churn executor memory in round loops — callers cache `candidates`.
     pref = bloom.prefilter(candidates, url_col)
-    fresh = pref.filter(~F.col("maybe_seen")).drop("maybe_seen")
     if not confirm:
-        return fresh
-    maybe = pref.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = maybe.join(seen.select(url_col), url_col, "left_anti")
-    return fresh.unionByName(confirmed)
+        return pref.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    known = seen.select(F.col(url_col).alias("_seen_url"))
+    return pref.join(
+        known, (pref[url_col] == known["_seen_url"]) & pref["maybe_seen"], "left_anti"
+    ).drop("maybe_seen")

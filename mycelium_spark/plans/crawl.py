@@ -22,14 +22,19 @@ Parity mapping:
   the Mongo upsert (Doc.cc:79) becomes Iceberg MERGE at scale, or
   ``row_number() OVER (PARTITION BY url ORDER BY round DESC) = 1`` on read.
 
-Execution: static inputs — the parsed robots rules and the followed,
-partitioned redirect edges — are prepared once per engine. Within a round,
-each intermediate with more than one consumer (the robots-gated schedule,
-the resolved chains, the fetched + extracted working set, links, the new
-frontier rows, ``next_frontier``, ``new_seen``) executes exactly once
-behind a lazy local checkpoint; the round's stats are read
-from those frames, the commits write from them, and the round releases
-them all before it returns.
+Execution: static inputs are prepared once per engine — the parsed robots
+rules, and the chain closure of the redirect edge table (every redirecting
+url resolved to its effective url, hop count and failure code), so a round
+resolves its chains with one left join. Within a round, each intermediate
+with more than one consumer (the robots-gated schedule, the fetched +
+extracted working set, links, the dedup frame, the new frontier rows,
+``next_frontier``) executes exactly once behind a lazy local checkpoint.
+The dedup frame is one pass over the link candidates and the redirect
+targets that join the seen set: one frontier anti-join, one Bloom
+prefilter + exact confirm, one host UDF; the new frontier rows and the
+seen extras are both projections of it. The round's stats are read from
+those frames, the commits write from them, and the round releases them
+all before it returns.
 
 Checkpoint/resume: every table commit is an atomic snapshot (see
 sources/catalog.py); the round counter lives in the frontier table's
@@ -56,11 +61,7 @@ from ..functions.robots import Robots, RobotsState, robots_state_for
 from ..functions.udfs import EXTRACT_TYPE, extract_frame, normalize_url_series, url_parts_frame, URL_PARTS_TYPE
 from ..operators.frontier import assign_seq, politeness_schedule, with_worker_bucket
 from ..operators.materialize import release
-from ..operators.redirects import (
-    prepare_redirect_edges,
-    redirect_edges,
-    resolve_redirect_chains,
-)
+from ..operators.redirects import redirect_edges, resolve_redirect_chains
 from ..operators.seen import BloomSeen, new_urls
 from ..sources.catalog import Catalog
 
@@ -132,16 +133,20 @@ class CrawlEngine:
         # Redirect support (crawler.cc:52,862-868,1094-1096): active iff the
         # pages table carries a ``redirect_to`` column (the Location header
         # of 3xx rows). Redirect rows are edges, not content — the content
-        # join sees only non-redirecting rows. The edge table is static:
-        # it is followed, partitioned and materialized once per engine.
-        self.has_redirects = "redirect_to" in pages.columns
-        if self.has_redirects:
-            self.redirects = prepare_redirect_edges(redirect_edges(pages))
+        # join sees only non-redirecting rows. The edge table is static and
+        # a chain is a function of its start url, so the chains of every
+        # redirecting url (the closure) are resolved once per engine, and
+        # held as the union of the resolver's materialized hops.
+        if "redirect_to" in pages.columns:
+            edges = redirect_edges(pages)
+            self.chains = resolve_redirect_chains(
+                edges.select(F.col("r_src").alias("url")).distinct(), edges
+            )
             self.content_pages = pages.filter(
                 F.col("redirect_to").isNull()
             ).drop("redirect_to")
         else:
-            self.redirects = None
+            self.chains = None
             self.content_pages = pages
         self.user_agent = user_agent
         self.per_host_budget = per_host_budget
@@ -196,6 +201,23 @@ class CrawlEngine:
             seen = self.cat.read("seen")
             if seen is not None:
                 self.bloom.add_df(seen, "url")
+
+    def resolve_chains(self, urls: DataFrame) -> DataFrame:
+        """``urls`` plus ``eff_url``, ``hops`` and ``redirect_code``, looked
+        up in the chain closure: a url that does not redirect is its own
+        effective url, with 0 hops and code 0. Adaptive execution plans
+        the join from the runtime sizes (a small closure is broadcast)."""
+        if self.chains is None:
+            return urls.select(
+                "*", F.col("url").alias("eff_url"), F.lit(0).alias("hops"),
+                F.lit(0).alias("redirect_code"),
+            )
+        return urls.join(self.chains, "url", "left").select(
+            *urls.columns,
+            F.coalesce("eff_url", "url").alias("eff_url"),
+            F.coalesce("hops", F.lit(0)).alias("hops"),
+            F.coalesce("redirect_code", F.lit(0)).alias("redirect_code"),
+        )
 
     def _parse_robots(self, rows: DataFrame) -> DataFrame:
         """(host, status, robots_txt) → materialized (host, state, groups_json)."""
@@ -443,6 +465,43 @@ class CrawlEngine:
             .select("host", "_budget")
         )
 
+    def dedup_candidates(
+        self, links: DataFrame, targets: DataFrame, frontier: DataFrame
+    ) -> DataFrame:
+        """The round's one dedup pass: (url, src_seq, pos, tgt, host) for
+        every url that is a link (src, src_seq, pos, url) of this round or,
+        with ``tgt`` true, in ``targets`` (url), minus the whole current
+        frontier and the seen set. On ``tgt`` false rows, ``src_seq``/``pos``
+        are the url's first arrival among the links.
+
+        ``tgt`` false rows are the next frontier's new rows. A link to
+        this round's redirect TARGET is already crawled — its content just
+        landed under the requesting doc's eff_url — so a url in both sets
+        is ``tgt`` true. The round passes as ``targets`` only the targets
+        of chains that YIELDED content: a chain ending in a fetch-failure
+        stub (curl 6/42) leaves its target fetchable and unseen, so a later
+        direct link gets its own doc row (the reference stubs per
+        requested URL).
+
+        ``tgt`` true rows are the seen extras: BOTH ends of a followed
+        chain enter seen, so a crawled redirect target is never refetched.
+        The frontier anti-join covers the politeness-deferred rows too: a
+        link to a url still queued is not queued twice, and a target still
+        queued enters seen via the schedule when its turn comes, not twice.
+        """
+        cand = (
+            links.select("url", "src_seq", "pos", F.lit(False).alias("tgt"))
+            .unionByName(targets.withColumn("tgt", F.lit(True)), allowMissingColumns=True)
+            .groupBy("url")
+            .agg(F.min(F.struct("src_seq", "pos")).alias("arr"), F.max("tgt").alias("tgt"))
+            .select("url", "arr.src_seq", "arr.pos", "tgt")
+            .join(frontier.select("url"), "url", "left_anti")
+        )
+        parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
+        return new_urls(cand, self.cat.read("seen"), self.bloom, "url").withColumn(
+            "host", parts_udf("url").getField("host")
+        )
+
     def run_round(self) -> dict:
         """Execute one crawl round; returns stats. No-op if frontier empty.
 
@@ -499,13 +558,7 @@ class CrawlEngine:
         # 3a. redirect-chain resolution (crawler.cc:52,1094-1096): the
         # content lives at the chain's effective URL; cap/protocol
         # failures become curl-code stubs like every other fetch failure
-        if self.has_redirects:
-            resolved = resolve_redirect_chains(allowed, self.redirects)
-            held.append(resolved)
-        else:
-            resolved = allowed.withColumn("eff_url", F.col("url")).withColumn(
-                "redirect_code", F.lit(0)
-            )
+        resolved = self.resolve_chains(allowed)
         # 3b. the working set: one row per fetched url, content joined only
         # for chains that resolved; failed chains keep a null html
         pages = self.content_pages.select(
@@ -591,37 +644,17 @@ class CrawlEngine:
             .withColumn("round", F.lit(r))
         )
 
-        # 6. next frontier = links ∖ (seen ∪ scheduled), deduped, FIFO-seq'd
-        seen = self.cat.read("seen")
-        cand = (
-            links.groupBy("url")
-            .agg(F.min(F.struct("src_seq", "pos")).alias("arr"))
-            .select("url", "arr.src_seq", "arr.pos")
+        # 6. one dedup pass: the next frontier rows (links) and the seen
+        # extras (redirect targets) are both projections of one frame
+        targets = extracted.filter(F.col("eff_url") != F.col("url")).select(
+            F.col("eff_url").alias("url")
         )
-        # anti-join against the WHOLE current frontier (scheduled + deferred):
-        # a link may point at a URL still queued behind the politeness budget
-        cand = cand.join(frontier.select("url"), "url", "left_anti")
-        # a link to this round's redirect TARGET is already crawled — its
-        # content just landed under the requesting doc's eff_url. Only
-        # chains that actually YIELDED content suppress the target: a chain
-        # ending in a fetch-failure stub (curl 6/42) leaves the target
-        # fetchable, so a later direct link gets its own doc row (the
-        # reference stubs per requested URL).
-        if self.has_redirects:
-            targets = extracted.filter(F.col("eff_url") != F.col("url")).select(
-                F.col("eff_url").alias("url")
-            )
-            cand = cand.join(targets, "url", "left_anti")
-        parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
         # held: the range exchange in assign_seq samples its input in a
         # job of its own, which would re-run the Bloom and host UDFs
-        fresh = hold(
-            new_urls(cand, seen, self.bloom, "url").withColumn(
-                "host", parts_udf("url").getField("host")
-            )
-        )
+        dedup = hold(self.dedup_candidates(links, targets, frontier))
         new_frontier = assign_seq(
-            fresh.select("url", "host", "src_seq", "pos"), ["src_seq", "pos", "url"], next_seq
+            dedup.filter(~F.col("tgt")).select("url", "host", "src_seq", "pos"),
+            ["src_seq", "pos", "url"], next_seq,
         )
         held.append(new_frontier)
         next_frontier = hold(
@@ -645,21 +678,8 @@ class CrawlEngine:
         )
 
         # 8. seen: every scheduled url (disallowed ones too, popped without
-        # fetch) plus, with redirects, BOTH ends of a followed chain — a
-        # redirect target already crawled must not be refetched when linked
-        # directly. Extras come only from chains that yielded content: a
-        # chain ending in a fetch-failure stub leaves its target unseen so
-        # a direct link later records a doc row for it. Deduped against the
-        # WHOLE current frontier (a target still queued behind the
-        # politeness budget enters seen via `scheduled` when its turn
-        # comes, not twice) and the committed seen table (same
-        # Bloom-prefilter + exact-anti path as link candidates) so seen
-        # stays duplicate-free.
-        new_seen = gated.select("url")
-        if self.has_redirects:
-            extras = targets.distinct().join(frontier.select("url"), "url", "left_anti")
-            new_seen = new_seen.unionByName(new_urls(extras, seen, self.bloom, "url"))
-        new_seen = hold(new_seen)
+        # fetch) plus the seen extras of the dedup pass
+        new_seen = gated.select("url").unionByName(dedup.filter(F.col("tgt")).select("url"))
         if self.bloom is not None:
             self.bloom.add_df(new_seen, "url")
             # quiescent point for version GC: every frame built against an

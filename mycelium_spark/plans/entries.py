@@ -66,6 +66,14 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # takes its cache with it). Plans are immutable — reuse is free; the
     # DATA is still scanned from parquet on every action, nothing is
     # persisted (no .cache()).
+    #
+    # Static-fixture assumption: the key is (sf_dir, name) only, so the
+    # memo assumes a table's files do not change for the session's
+    # lifetime: the analyzed relation keeps the file listing and schema
+    # of its first read, and every later query scans through them. The
+    # sf* fixture tables are read-only, which makes this safe; a caller that
+    # rewrites a table between queries must use a new session or clear
+    # ``_mycelium_read_cache``.
     cache = getattr(spark, "_mycelium_read_cache", None)
     if cache is None:
         cache = {}

@@ -9,8 +9,13 @@
 * BOTH chain ends enter the seen set: a later link to the redirect target
   is not refetched; seen stays duplicate-free;
 * the synthetic corpus with with_redirects=True keeps the byte-identity
-  invariant through chains;
-* resolution stops hopping once no chain is in flight.
+  invariant through chains, and one of its rounds issues a fixed number
+  of Spark jobs;
+* resolution stops hopping once no chain is in flight;
+* the engine's chain closure gives what resolve_redirect_chains gives;
+* the round's one dedup pass: a url that is both a link and a crawled
+  chain target enters seen once and never the frontier; the target of a
+  failed chain stays unseen; a target still queued enters seen once.
 """
 
 import datetime
@@ -23,12 +28,14 @@ from mycelium_spark.operators.redirects import (
     CURLE_TOO_MANY_REDIRECTS,
     CURLE_UNSUPPORTED_PROTOCOL,
     prepare_redirect_edges,
+    redirect_edges,
     resolve_redirect_chains,
 )
 from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 TS = datetime.datetime(2012, 4, 7, 21, 28, 26)
+REDIRECT_ROUND_JOBS = 29  # jobs of round 0 of the synth redirect corpus
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string,"
     " redirect_to string"
@@ -250,11 +257,26 @@ def test_synth_corpus_with_redirects(spark, tmp_path):
         bloom_bits=1 << 16,
     )
     eng.seed(synth.seeds(n))
-    for _ in range(5):
+    sc = spark.sparkContext
+    for r in range(5):
         before = _persisted_rdds(spark)
-        s = eng.run_round()
-        # the round released every hop and intermediate it materialized
+        if r == 0:
+            sc.setJobGroup("redirect-round0", "one crawl round")
+        try:
+            s = eng.run_round()
+        finally:
+            if r == 0:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        # the round released every intermediate it materialized
         assert _persisted_rdds(spark) <= before
+        if r == 0:
+            # re-execution guard for the redirect path, as ROUND_JOBS in
+            # test_crawl_e2e.py: re-pin only after checking that no
+            # intermediate of the round is executed twice
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert len(sc.statusTracker().getJobIdsForGroup("redirect-round0")) == (
+                REDIRECT_ROUND_JOBS
+            )
         if s.get("done"):
             break
     docs = eng.cat.read("docs")
@@ -284,3 +306,122 @@ def test_refresh_candidates_redirect_aware(spark, chain_pages, crawled):
     assert "http://h5.example/r" not in cands     # covered as h0's target
     assert "http://g6.example/r" in cands         # never reached (over-cap chain)
     assert "http://a.example/start" not in cands  # effective page unchanged
+
+
+def test_chain_closure_matches_resolver(spark, chain_pages, crawled):
+    """The engine resolves each chain once, in its closure; a lookup in it
+    equals resolve_redirect_chains for every url, redirecting or not."""
+    eng, _, _ = crawled
+    urls = chain_pages.select("url").union(
+        spark.createDataFrame([("http://plain.example/p",)], "url string")
+    )
+    fields = ("eff_url", "hops", "redirect_code")
+    closure = {
+        r["url"]: tuple(r[f] for f in fields) for r in eng.resolve_chains(urls).collect()
+    }
+    resolved = resolve_redirect_chains(urls, redirect_edges(chain_pages))
+    try:
+        direct = {r["url"]: tuple(r[f] for f in fields) for r in resolved.collect()}
+    finally:
+        release(resolved)
+    assert closure == direct
+    assert len(closure) == chain_pages.count() + 1
+    assert closure["http://a.example/start"] == ("http://c.example/end", 2, 0)
+    assert closure["http://h0.example/r"] == ("http://h5.example/r", 5, 0)
+    assert closure["http://g0.example/r"] == (
+        "http://g5.example/r", 5, CURLE_TOO_MANY_REDIRECTS
+    )
+    assert closure["http://loop.example/x"][2] == CURLE_TOO_MANY_REDIRECTS
+    assert closure["http://badproto.example/x"] == (
+        "http://badproto.example/x", 0, CURLE_UNSUPPORTED_PROTOCOL
+    )
+    assert closure["http://rel.example/a/old.html"] == (
+        "http://rel.example/new/spot.html", 1, 0
+    )
+    assert closure["http://plain.example/p"] == ("http://plain.example/p", 0, 0)
+    assert closure["http://c.example/end"] == ("http://c.example/end", 0, 0)
+
+
+@pytest.fixture(scope="module")
+def dedup_rounds(spark, tmp_path_factory):
+    """Rounds stepped one at a time at budget 1 per host, recording the
+    frontier and seen urls after each round."""
+    big = b"<html><body>" + b"x" * (1 << 20) + b"</body></html>"
+    rows = [
+        # c.example/end is a link of linker AND the target of a's chain,
+        # both in round 0
+        _redir("http://a.example/start", "http://c.example/end"),
+        _content("http://c.example/end", "chain target", []),
+        _content(
+            "http://linker.example/p", "links",
+            ["http://c.example/end", "http://gone.example/y"],
+        ),
+        # failed chains: no pages row at the target (6), target over the
+        # 1 MiB cap (42)
+        _redir("http://dead.example/x", "http://gone.example/y"),
+        _redir("http://tobig.example/x", "http://big.example/huge"),
+        ("http://big.example/huge", TS, big, None, "en", None),
+        # r's chain target is queued behind q/first at budget 1
+        _content("http://q.example/first", "q first", []),
+        _content("http://q.example/target", "q target", []),
+        _redir("http://r.example/start", "http://q.example/target"),
+    ]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA).cache()
+    eng = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp("dedup")), pages, per_host_budget=1,
+        n_buckets=4, bloom_bits=1 << 14,
+    )
+    eng.seed(list(enumerate([
+        "http://a.example/start", "http://linker.example/p",
+        "http://dead.example/x", "http://tobig.example/x",
+        "http://q.example/first", "http://q.example/target",
+        "http://r.example/start",
+    ])))
+    after = []
+    for _ in range(4):
+        s = eng.run_round()
+        after.append((
+            {r["url"] for r in eng.cat.read("frontier").collect()},
+            [r["url"] for r in eng.cat.read("seen").collect()],
+        ))
+        if s.get("done"):
+            break
+    docs = eng.cat.read("docs").collect()
+    pages.unpersist()
+    return after, docs
+
+
+def test_link_and_chain_target_enters_seen_once(dedup_rounds):
+    after, docs = dedup_rounds
+    target = "http://c.example/end"
+    assert all(target not in frontier for frontier, _ in after)
+    _, seen0 = after[0]
+    assert seen0.count(target) == 1
+    _, seen = after[-1]
+    assert seen.count(target) == 1 and len(seen) == len(set(seen))
+    assert target not in {d["url"] for d in docs}
+
+
+def test_failed_chain_target_stays_unseen(dedup_rounds):
+    after, docs = dedup_rounds
+    by_url = {d["url"]: d for d in docs}
+    assert by_url["http://dead.example/x"]["curl_code"] == 6
+    assert by_url["http://tobig.example/x"]["curl_code"] == 42
+    _, seen0 = after[0]
+    assert "http://gone.example/y" not in seen0
+    assert "http://big.example/huge" not in seen0
+    # the direct link to the failed target is queued and fetched as itself
+    assert "http://gone.example/y" in after[0][0]
+    assert by_url["http://gone.example/y"]["curl_code"] == 6
+    _, seen = after[-1]
+    assert seen.count("http://gone.example/y") == 1
+
+
+def test_queued_chain_target_enters_seen_once(dedup_rounds):
+    after, docs = dedup_rounds
+    target = "http://q.example/target"
+    frontier0, seen0 = after[0]
+    assert target in frontier0 and target not in seen0
+    _, seen = after[-1]
+    assert seen.count(target) == 1
+    assert [d["round"] for d in docs if d["url"] == target] == [1]

@@ -136,3 +136,84 @@ def test_versions_survive_until_expire_and_failed_build_keeps_version(arrow, tmp
     assert bloom.version == v_before
     # and membership against the last good version still works
     assert bloom.prefilter(old_plan_input, "url").filter(~F.col("maybe_seen")).count() == 0
+
+
+def _plan_nodes(node):
+    """Every node of a (logical) plan tree, root first."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        ch = n.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _udf_names(node) -> list[str]:
+    if _kind(node) != "ArrowEvalPython":
+        return []
+    udfs = node.udfs()
+    return [udfs.apply(i).name() for i in range(udfs.size())]
+
+
+def _scans(node, table_dir: str) -> bool:
+    return any(
+        _kind(n) == "LogicalRelation"
+        and table_dir in n.relation().location().rootPaths().head().toString()
+        for n in _plan_nodes(node)
+    )
+
+
+@pytest.mark.parametrize("shards", [1, 4])
+def test_round_dedup_runs_each_python_udf_once(arrow, tmp_path, shards):
+    """The round's dedup frame evaluates the Bloom membership once (one
+    ArrowEvalPython `member`, or one shard-local MapInPandas) and the host
+    UDF once, and no Python runs on the seen side of any join: the seen
+    scan is never a Bloom input."""
+    from mycelium_spark.plans.crawl import CrawlEngine
+    from mycelium_spark.sources import synth
+
+    spark = arrow
+    eng = CrawlEngine(
+        spark, str(tmp_path / "w"), synth.pages_df(spark, 40, 4), bloom_bits=1 << 13,
+        bloom_shards=shards,
+    )
+    seen = _urls(spark, 0, 300)
+    eng.cat.commit("seen", seen, mode="append", meta={"round": 0})
+    eng.bloom.add_df(seen, "url")
+    links = _urls(spark, 200, 500).select(
+        F.lit("http://src.example/").alias("src"), F.lit(0).alias("src_seq"),
+        F.col("url").substr(-3, 3).cast("int").alias("pos"), "url",
+    )
+    targets = _urls(spark, 450, 520)
+    frontier = _urls(spark, 480, 490)
+    dedup = eng.dedup_candidates(links, targets, frontier)
+    nodes = _plan_nodes(dedup._jdf.queryExecution().optimizedPlan())
+    udfs = [name for n in nodes for name in _udf_names(n)]
+    n_map = sum(_kind(n) == "MapInPandas" for n in nodes)
+    if shards == 1:
+        assert udfs.count("member") == 1 and n_map == 0
+    else:
+        assert "member" not in udfs and n_map == 1
+    assert udfs.count("url_parts_frame") == 1
+    seen_dir = eng.cat.root
+    seen_sides = [
+        c
+        for n in nodes if _kind(n) == "Join"
+        for c in (n.left(), n.right()) if _scans(c, f"{seen_dir}/seen")
+    ]
+    assert seen_sides
+    python = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
+    assert not [n for c in seen_sides for n in _plan_nodes(c) if _kind(n) in python]
+    # and the frame is the exact set difference, tagged by origin
+    rows = {(r["url"], r["tgt"]) for r in dedup.collect()}
+    link_urls = {r["url"] for r in links.collect()}
+    target_urls = {r["url"] for r in targets.collect()}
+    known = {r["url"] for r in seen.collect()} | {r["url"] for r in frontier.collect()}
+    assert rows == {
+        (u, u in target_urls) for u in (link_urls | target_urls) - known
+    }
