@@ -174,8 +174,9 @@ def dedup_variants_job(spark, data_dir: str, shard_dir: str) -> dict:
 
     exact_anti    — candidates ⟕̸ seen (the seen side shuffles every round);
     bloom_confirm — sharded-Bloom prefilter + exact confirm anti-join
-                    (exact output; only FP-rate of candidates reach the
-                    confirm join, but seen still shuffles);
+                    (exact output; every candidate takes part in the
+                    one confirm join, whose condition carries the Bloom
+                    result, and seen still shuffles);
     bloom_approx  — prefilter only (the 10^10 mode: seen NEVER shuffles;
                     drops FP-rate of new URLs — measured as fp_dropped).
 

@@ -18,26 +18,27 @@ column holds the Location header value (possibly relative — resolved
 against the current URL via the F9 merge_ref kernel, which is what curl
 does per RFC 7231 §7.1.2).
 
-Resolution runs in two parts:
+``resolve_redirect_chains`` takes the raw (r_src, r_dst) edge table and
+resolves a batch of URLs in two steps:
 
-* ``prepare_redirect_edges`` — once per edge table: a hop only ever
-  leaves an edge's source, so each edge's next URL (merge_ref +
-  normalize of its Location against ``r_src``) and the REDIR_PROTOCOLS
-  check are functions of the edge alone. They are computed once, with
-  the edge set hash-partitioned by ``r_src``, and materialized;
-* ``resolve_redirect_chains`` — per batch of URLs: a driver-side loop of
-  at most ``max_redirs + 1`` hash joins between the in-flight rows and
-  the prepared edges, with no Python in the loop. Each hop is
-  materialized once and the loop stops as soon as no row is in flight,
-  so the number of hops follows the longest chain in the batch, capped
-  by the protocol constant.
+* it prepares the edges once per call: a hop only ever leaves an edge's
+  source, so each edge's next URL (merge_ref + normalize of its Location
+  against ``r_src``) and the REDIR_PROTOCOLS check are functions of the
+  edge alone. They are computed once, with the edge set hash-partitioned
+  by ``r_src``, and materialized; the call releases them before it
+  returns;
+* a driver-side loop of at most ``max_redirs + 1`` hash joins between
+  the in-flight rows and the prepared edges, with no Python in the loop.
+  Each hop is materialized once and the loop stops as soon as no row is
+  in flight, so the number of hops follows the longest chain in the
+  batch, capped by the protocol constant.
 
 A chain is a function of its start URL, so over a static edge table the
-crawl engine runs both parts once, on the distinct ``r_src`` of the
-edges: the result is the table's chain closure, and resolving a batch is
-then one left join against it (a URL with no closure row does not
-redirect). Batch callers without a fixed edge table (the
-``redirect_resolve`` query, ``bench.py``) call the two parts directly.
+crawl engine makes one call, on the distinct ``r_src`` of the edges: the
+result is the table's chain closure, and resolving a batch is then one
+left join against it (a URL with no closure row does not redirect).
+Batch callers without a fixed edge table (the ``redirect_resolve``
+query, ``bench.py``) call ``resolve_redirect_chains`` on their batch.
 
 Intermediate-hop URLs are normalized before each join (the pages table is
 keyed by normalized URL); the reference normalizes only the final
@@ -135,35 +136,30 @@ def _follow_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def prepare_redirect_edges(edges: DataFrame) -> DataFrame:
-    """Prepare a (r_src, r_dst) edge table for ``resolve_redirect_chains``:
-    follow every edge once and hash-partition the result by ``r_src``.
-
-    The result is an eager local checkpoint, so no hop join re-runs the
-    follow kernel. Without adaptive execution the checkpoint keeps its
-    partitioning and no hop join re-shuffles the edge side; under
-    adaptive execution Spark 4.1 reports a checkpoint's partitioning as
-    unknown, so each hop join plans its own exchange. The partition count
-    follows the session's parallelism. A caller that prepares a static
-    edge table keeps the result for the table's lifetime;
-    ``materialize.release`` frees it."""
+def _prepare_redirect_edges(edges: DataFrame) -> DataFrame:
+    """Follow every (r_src, r_dst) edge once and hash-partition the
+    result by ``r_src``, as an eager local checkpoint, so no hop join
+    re-runs the follow kernel. Without adaptive execution the checkpoint
+    keeps its partitioning and no hop join re-shuffles the edge side;
+    under adaptive execution Spark 4.1 reports a checkpoint's
+    partitioning as unknown, so each hop join plans its own exchange.
+    The partition count follows the session's parallelism."""
     n = edges.sparkSession.sparkContext.defaultParallelism
     return _follow_edges(edges).repartition(n, "r_src").localCheckpoint()
 
 
 def resolve_redirect_chains(
     urls_df: DataFrame,
-    redirects: DataFrame,
+    edges: DataFrame,
     max_redirs: int = MAXREDIRS,
     url_col: str = "url",
 ) -> DataFrame:
     """Resolve every row's redirect chain to its effective URL.
 
     ``urls_df``: any DataFrame with normalized URLs in ``url_col`` (all
-    other columns ride along). ``redirects``: the output of
-    ``prepare_redirect_edges``, or raw (r_src, r_dst) edges — r_src
-    normalized, r_dst a raw Location value — which are prepared here
-    for this call and released before it returns.
+    other columns ride along). ``edges``: (r_src, r_dst) — r_src
+    normalized, r_dst a raw Location value; they are prepared for this
+    call and released before it returns.
 
     Returns the input columns plus:
       * ``eff_url``  — final URL reached (== ``url_col`` when no redirect;
@@ -178,46 +174,44 @@ def resolve_redirect_chains(
     none are. The result is a union over those hops; free their
     blocks with ``materialize.release`` on the result when done with it.
     """
-    if "r_next" not in redirects.columns:
-        prepared = prepare_redirect_edges(redirects)
-        try:
-            return resolve_redirect_chains(urls_df, prepared, max_redirs, url_col)
-        finally:
-            release(prepared)
-    in_flight = F.col("redirect_code").isNull()
-    active = urls_df.withColumn("eff_url", F.col(url_col)).withColumn(
-        "hops", F.lit(0)
-    )
-    steps: list[DataFrame] = []
-    for hop in range(max_redirs + 1):
-        code = F.when(F.col("r_src").isNull(), F.lit(0))
-        if hop == max_redirs:
-            # a pending hop #max_redirs+1 exceeds CURLOPT_MAXREDIRS
-            code = code.otherwise(F.lit(CURLE_TOO_MANY_REDIRECTS))
-        else:
-            code = code.when(
-                F.col("r_next").isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)
-            )
-        # a failing hop keeps the state before it; a followed hop advances
-        step = (
-            active.join(redirects, active["eff_url"] == redirects["r_src"], "left")
-            .withColumn("redirect_code", code)
-            .withColumn(
-                "eff_url",
-                F.when(in_flight, F.col("r_next")).otherwise(F.col("eff_url")),
-            )
-            .withColumn("hops", F.col("hops") + in_flight.cast("int"))
-            .drop("r_src", "r_next")
-            .localCheckpoint(eager=False)
+    prepared = _prepare_redirect_edges(edges)
+    try:
+        in_flight = F.col("redirect_code").isNull()
+        active = urls_df.withColumn("eff_url", F.col(url_col)).withColumn(
+            "hops", F.lit(0)
         )
-        steps.append(step)
-        active = step.filter(in_flight)
-        if active.count() == 0:
-            break
-    out = steps[0].filter(~in_flight)
-    for step in steps[1:]:
-        out = out.unionByName(step.filter(~in_flight))
-    return out
+        steps: list[DataFrame] = []
+        for hop in range(max_redirs + 1):
+            code = F.when(F.col("r_src").isNull(), F.lit(0))
+            if hop == max_redirs:
+                # a pending hop #max_redirs+1 exceeds CURLOPT_MAXREDIRS
+                code = code.otherwise(F.lit(CURLE_TOO_MANY_REDIRECTS))
+            else:
+                code = code.when(
+                    F.col("r_next").isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)
+                )
+            # a failing hop keeps the state before it; a followed hop advances
+            step = (
+                active.join(prepared, active["eff_url"] == prepared["r_src"], "left")
+                .withColumn("redirect_code", code)
+                .withColumn(
+                    "eff_url",
+                    F.when(in_flight, F.col("r_next")).otherwise(F.col("eff_url")),
+                )
+                .withColumn("hops", F.col("hops") + in_flight.cast("int"))
+                .drop("r_src", "r_next")
+                .localCheckpoint(eager=False)
+            )
+            steps.append(step)
+            active = step.filter(in_flight)
+            if active.count() == 0:
+                break
+        out = steps[0].filter(~in_flight)
+        for step in steps[1:]:
+            out = out.unionByName(step.filter(~in_flight))
+        return out
+    finally:
+        release(prepared)
 
 
 def resolve_redirects_sql(

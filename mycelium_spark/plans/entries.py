@@ -493,9 +493,7 @@ def redirect_resolve_q(spark, sf_dir):
     edges = docs.filter(
         (F.col("doc_id") % 101 == 0) | (F.col("doc_id") % 13 < 5)
     ).select(_url(F.col("doc_id")).alias("r_src"), _url(dst_id).alias("r_dst"))
-    out = redirects.resolve_redirect_chains(
-        urls, redirects.prepare_redirect_edges(edges)
-    )
+    out = redirects.resolve_redirect_chains(urls, edges)
     return out.select(
         "doc_id", "eff_url",
         F.col("hops").cast("int").alias("hops"),

@@ -27,7 +27,6 @@ from mycelium_spark.operators.materialize import release
 from mycelium_spark.operators.redirects import (
     CURLE_TOO_MANY_REDIRECTS,
     CURLE_UNSUPPORTED_PROTOCOL,
-    prepare_redirect_edges,
     redirect_edges,
     resolve_redirect_chains,
 )
@@ -176,7 +175,7 @@ def _persisted_rdds(spark) -> set[int]:
 
 
 def test_resolver_unit(spark):
-    """resolve_redirect_chains standalone: hop counts and codes. Raw
+    """resolve_redirect_chains standalone: hop counts and codes. The
     edges are prepared for the call and released by it."""
     before = _persisted_rdds(spark)
     urls = spark.createDataFrame(
@@ -219,14 +218,12 @@ def test_short_chains_stop_hopping_early(spark):
     """The hop loop ends once no row is in flight: a batch whose longest
     chain is one redirect runs fewer hops (so fewer jobs) than a batch
     holding an over-cap chain, and the results are unchanged. Releasing
-    the results and the prepared edges frees every block they held."""
+    the results frees every block the calls held."""
     before = _persisted_rdds(spark)
-    edges = prepare_redirect_edges(
-        spark.createDataFrame(
-            [("http://s.example/0", "http://s.example/1")]
-            + [(f"http://l.example/{i}", f"http://l.example/{i + 1}") for i in range(6)],
-            "r_src string, r_dst string",
-        )
+    edges = spark.createDataFrame(
+        [("http://s.example/0", "http://s.example/1")]
+        + [(f"http://l.example/{i}", f"http://l.example/{i + 1}") for i in range(6)],
+        "r_src string, r_dst string",
     )
     short = spark.createDataFrame(
         [("http://s.example/0",), ("http://plain.example/p",)], "url string"
@@ -243,7 +240,6 @@ def test_short_chains_stop_hopping_early(spark):
     assert rows["http://l.example/0"]["eff_url"] == "http://l.example/5"
     assert rows["http://l.example/0"]["hops"] == 5
     assert short_jobs < long_jobs
-    release(edges)
     assert _persisted_rdds(spark) <= before
 
 
