@@ -151,7 +151,7 @@ def schedule_dedup_job(spark, data_dir: str, per_host_budget: int = 4096) -> dic
     frontier = spark.read.parquet(f"{data_dir}/frontier")
     seen = spark.read.parquet(f"{data_dir}/seen")
     t0 = time.time()
-    scheduled, _deferred = politeness_schedule(frontier, per_host_budget, salt=16)
+    scheduled, _deferred = politeness_schedule(frontier, per_host_budget)
     joined = scheduled.select("url").join(seen.withColumn("_s", F.lit(1)), "url", "left")
     row = joined.agg(
         F.count(F.lit(1)).alias("sched"),

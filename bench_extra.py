@@ -56,7 +56,7 @@ def main() -> None:
 
         frontier = spark.read.parquet(f"{DATA}/frontier")
         seen = spark.read.parquet(f"{DATA}/seen")
-        scheduled, _ = politeness_schedule(frontier, 4096, salt=16)
+        scheduled, _ = politeness_schedule(frontier, 4096)
         joined = scheduled.select("url").join(
             seen.withColumn("_s", F.lit(1)), "url", "left"
         )

@@ -3,8 +3,9 @@
 Pure accelerator for the base-class ``html_lex`` path (guide §4.2: do the
 heavy lifting in native code inside the UDF): the Python ``HtmlLexer``
 stays the canonical spec, subclasses (block segmentation) keep the Python
-path, and any build/load failure here silently falls back to Python —
-``get()`` returns None and callers carry on.  Byte parity between the two
+path, and any build/load failure here falls back to Python — ``get()``
+warns once per process, naming the cause, and returns None; callers carry
+on with the slower Python kernel.  Byte parity between the two
 kernels is pinned by tests/test_clexer.py (golden vectors + synthetic
 corpus + differential fuzz).
 
@@ -15,8 +16,6 @@ dlopen()s the cached file.  Rare paths call back into Python: numeric
 character references >= 0x800 (unicodedata-checked cp2utf8) and link
 resolution for URLs that fail the canonical-form screen (the exact
 ``Url``/``merge_ref`` kernel).
-
-Disable with SPARK_GRAFT_CLEX=0.
 """
 
 from __future__ import annotations
@@ -28,6 +27,7 @@ import subprocess
 import tempfile
 import time
 import unicodedata
+import warnings
 
 from .entities import ENTITY_TABLE, cp2utf8
 from .url import BadUrl, Url
@@ -276,22 +276,26 @@ _TRIED = False
 
 
 def get() -> _Kernel | None:
-    """The loaded C kernel, or None (disabled / unbuildable / load failed)."""
+    """The loaded C kernel, or None (unbuildable / load failed): the first
+    failure in a process warns with its cause."""
     global _KERNEL, _TRIED
     if _TRIED:
         return _KERNEL
     _TRIED = True
-    if os.environ.get("SPARK_GRAFT_CLEX", "1") == "0":
-        return None
     try:
         src = _read_source()
         if not src:
-            return None
+            raise RuntimeError("clex.c not found in the package")
         so = _compile(src)
         if not so:
-            return None
-        lib = ctypes.CDLL(so)
-        _KERNEL = _Kernel(lib)
-    except Exception:
+            raise RuntimeError("could not compile clex.c (cc/gcc missing or failed)")
+        _KERNEL = _Kernel(ctypes.CDLL(so))
+    except Exception as e:
         _KERNEL = None
+        warnings.warn(
+            f"C lexer kernel unavailable, html_lex falls back to the "
+            f"Python kernel: {e!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return _KERNEL

@@ -103,14 +103,6 @@ def classify_blocks(blocks: DataFrame) -> DataFrame:
     """→ (block_id, cls, cls_cf, doc_id, keep): jusText two-phase class
     per block of ``blocks`` (doc_id, block_id, text, link_chars).
     Blocks with NULL/empty text are 'bad'. keep = final class is good."""
-    return _classify_full(blocks).select("block_id", "cls", "cls_cf", "doc_id", "keep")
-
-
-def _classify_full(blocks: DataFrame) -> DataFrame:
-    """classify_blocks plus the block text carried through — the context
-    windows haul ``text`` anyway, so keeping it costs nothing and lets
-    main_content skip a (doc_id, block_id) join back onto ``blocks``
-    (which re-ran the upstream mapInPandas segmentation pass)."""
     cf = F.when(
         F.col("text").isNull() | (F.length("text") == 0), F.lit("bad")
     ).otherwise(F.expr(_cf_case_sql("spark")))
@@ -145,7 +137,7 @@ def _classify_full(blocks: DataFrame) -> DataFrame:
     return (
         b.withColumn("cls", final)
         .withColumn("keep", F.col("cls") == "good")
-        .select("block_id", "cls", "cls_cf", "doc_id", "keep", "text")
+        .select("block_id", "cls", "cls_cf", "doc_id", "keep")
     )
 
 

@@ -8,12 +8,10 @@ mapping:
 * per-round politeness budget B: rows ranked ≤ B are scheduled this round,
   the rest are deferred to the next round — with 5 s scheduler ticks, B
   rounds ≈ B sequential fetches per host, reproducing the ≤1-in-flight
-  invariant at round granularity;
-* host→worker affinity: ``pmod(xxhash64(host), n_buckets)`` replaces the
-  first-empty-subqueue binding (deterministic, shuffle-friendly);
-* skew: a hot host's *scheduled* rows (budget already enforced per host!)
-  can be salted across ``n_salt`` sub-partitions for the fetch/extract
-  stage so one executor doesn't own 30% of the corpus.
+  invariant at round granularity. The budget window alone enforces
+  politeness: the reference's host→subqueue binding has no partitioning
+  analog, since the fetch join re-partitions the scheduled rows by url
+  and a host partitioning would not reach the fetch.
 
 Scale notes (10^10 frontier): the window shuffle partitions by host —
 at ~10^7-10^8 hosts this is well distributed; the single pathological case
@@ -53,7 +51,6 @@ def politeness_schedule(
     per_host_budget: int,
     host_col: str = "host",
     seq_col: str = "seq",
-    salt: int = 1,
     budget_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the frontier into (scheduled, deferred) for one round.
@@ -63,88 +60,27 @@ def politeness_schedule(
 
     ``budget_col`` names a per-row (constant-per-host) column holding that
     host's budget — the Crawl-delay extension: hosts declaring a delay get
-    ``min(per_host_budget, floor(round_period/delay))``. When set,
-    ``per_host_budget`` still bounds the salted phase-1 cut (it is the
-    maximum any host may get, so phase 1 stays a safe over-approximation).
-
-    ``salt > 1`` enables the two-phase skew-resistant plan: phase 1 windows
-    over (host, hash(url) % salt) and keeps the per-salt top-B (everything
-    beyond is deferred WITHOUT a join — it can't be in the global top-B);
-    phase 2 windows over host on at most salt*B rows per host. The hot-host
-    straggler task drops from sorting the whole backlog to sorting salt*B
-    rows. Identical output to the single-window plan.
+    ``min(per_host_budget, floor(round_period/delay))``; ``per_host_budget``
+    is then the maximum any host may get.
     """
     budget = F.col(budget_col) if budget_col else F.lit(per_host_budget)
     drop_cols = ["host_pos"] + ([budget_col] if budget_col else [])
     # A literal rank cut (`row_number() <= B`) is eligible for Spark's
     # WindowGroupLimit pushdown, which prunes each MAP partition to its
-    # per-host top-B BEFORE the window exchange — the skew cut the salted
-    # phase-1 window was built for, but map-side and without a second
-    # shuffle of the frontier. The rule only fires when the limit is under
+    # per-host top-B BEFORE the window exchange, so a hot host's backlog
+    # is not shuffled whole. The rule only fires when the limit is under
     # spark.sql.optimizer.windowGroupLimitThreshold (default 1000 < real
     # politeness budgets), so raise it to cover the budget: per-task state
-    # stays bounded at `limit` rows per group at any scale. The salted
-    # two-phase plan (below) remains for per-host budget columns, where
-    # the cut is not a literal and the pushdown cannot apply.
+    # stays bounded at `limit` rows per group at any scale. A per-host
+    # budget column is not a literal cut; the pushdown does not apply.
     _ensure_window_group_limit(frontier, per_host_budget)
-    if salt <= 1 or budget_col is None:
-        w = Window.partitionBy(host_col).orderBy(seq_col)
-        ranked = frontier.withColumn("host_pos", F.row_number().over(w))
-        scheduled = ranked.filter(F.col("host_pos") <= budget)
-        if budget_col:
-            scheduled = scheduled.drop(budget_col)
-        deferred = ranked.filter(F.col("host_pos") > budget).drop(*drop_cols)
-        return scheduled, deferred
-    cols = [c for c in frontier.columns if c != budget_col]
-    salted = frontier.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
-    )
-    w1 = Window.partitionBy(host_col, "_salt").orderBy(seq_col)
-    pre = salted.withColumn("_pos1", F.row_number().over(w1))
-    survivors = pre.filter(F.col("_pos1") <= per_host_budget)
-    deferred_far = pre.filter(F.col("_pos1") > per_host_budget).select(*cols)
-    w2 = Window.partitionBy(host_col).orderBy(seq_col)
-    ranked = survivors.withColumn("host_pos", F.row_number().over(w2))
-    scheduled = ranked.filter(F.col("host_pos") <= budget).drop("_salt", "_pos1")
+    w = Window.partitionBy(host_col).orderBy(seq_col)
+    ranked = frontier.withColumn("host_pos", F.row_number().over(w))
+    scheduled = ranked.filter(F.col("host_pos") <= budget)
     if budget_col:
         scheduled = scheduled.drop(budget_col)
-    deferred_near = ranked.filter(F.col("host_pos") > budget).select(*cols)
-    return scheduled, deferred_near.unionByName(deferred_far)
-
-
-def with_worker_bucket(
-    df: DataFrame, n_buckets: int, host_col: str = "host", n_salt: int = 8,
-    salt_threshold: int = 64,
-) -> DataFrame:
-    """Host→worker binding + hot-host salting for the fetch/extract stage.
-
-    ``bucket`` is the politeness affinity (hash(host) % n_buckets);
-    ``salt`` splits hosts whose scheduled row count exceeds
-    ``salt_threshold`` across sub-partitions. Budget was enforced BEFORE
-    salting, so politeness is preserved.
-
-    The per-host count comes from ``count(*) OVER (PARTITION BY host)`` —
-    NOT a groupBy + broadcast join: that broadcast carried one row per
-    distinct scheduled host through the driver, which at the 10^10 design
-    point (10^7-10^8 hosts) is hundreds of MB-GB per round (round-2
-    verdict, What's wrong #1). The window shuffles by host — rows the
-    politeness stage just partitioned that way — and nothing touches the
-    driver.
-    """
-    w = Window.partitionBy(host_col)
-    out = (
-        df.withColumn("_host_n", F.count(F.lit(1)).over(w))
-        .withColumn("bucket", F.pmod(F.xxhash64(F.col(host_col)), F.lit(n_buckets)))
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("_host_n") > salt_threshold,
-                F.pmod(F.xxhash64(F.col("url")), F.lit(n_salt)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_host_n")
-    )
-    return out.repartition(n_buckets, F.col("bucket"), F.col("salt"))
+    deferred = ranked.filter(F.col("host_pos") > budget).drop(*drop_cols)
+    return scheduled, deferred
 
 
 def assign_seq(

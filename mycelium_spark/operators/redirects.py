@@ -24,9 +24,8 @@ resolves a batch of URLs in two steps:
 * it prepares the edges once per call: a hop only ever leaves an edge's
   source, so each edge's next URL (merge_ref + normalize of its Location
   against ``r_src``) and the REDIR_PROTOCOLS check are functions of the
-  edge alone. They are computed once, with the edge set hash-partitioned
-  by ``r_src``, and materialized; the call releases them before it
-  returns;
+  edge alone. They are computed once and materialized; the call
+  releases them before it returns;
 * a driver-side loop of at most ``max_redirs + 1`` hash joins between
   the in-flight rows and the prepared edges, with no Python in the loop.
   Each hop is materialized once and the loop stops as soon as no row is
@@ -137,15 +136,12 @@ def _follow_edges(edges: DataFrame) -> DataFrame:
 
 
 def _prepare_redirect_edges(edges: DataFrame) -> DataFrame:
-    """Follow every (r_src, r_dst) edge once and hash-partition the
-    result by ``r_src``, as an eager local checkpoint, so no hop join
-    re-runs the follow kernel. Without adaptive execution the checkpoint
-    keeps its partitioning and no hop join re-shuffles the edge side;
-    under adaptive execution Spark 4.1 reports a checkpoint's
-    partitioning as unknown, so each hop join plans its own exchange.
-    The partition count follows the session's parallelism."""
-    n = edges.sparkSession.sparkContext.defaultParallelism
-    return _follow_edges(edges).repartition(n, "r_src").localCheckpoint()
+    """Follow every (r_src, r_dst) edge once, as an eager local
+    checkpoint, so no hop join re-runs the follow kernel. The checkpoint
+    is not partitioned by ``r_src``: under adaptive execution Spark 4.1
+    reports a checkpoint's partitioning as unknown, so each hop join
+    plans its own exchange of the edge side either way."""
+    return _follow_edges(edges).localCheckpoint()
 
 
 def resolve_redirect_chains(

@@ -43,9 +43,9 @@ from the last committed round with identical results.
 
 Scale notes (10^10 frontier, 1000 executors): frontier and seen are
 hash-distributed by url; the frontier⋈pages join shuffles on url (AQE
-handles skew); robots_rules and per-round host counts broadcast; the
-extract stage repartitions by (host-bucket, salt) for politeness affinity;
-per-partition lineage rows go to the metrics table every round.
+handles skew) and the extract UDF runs in that partitioning; robots_rules
+and the Crawl-delay budgets broadcast; per-partition lineage rows go to
+the metrics table every round.
 """
 
 from __future__ import annotations
@@ -59,7 +59,7 @@ from pyspark.sql.types import BooleanType
 
 from ..functions.robots import Robots, RobotsState, robots_state_for
 from ..functions.udfs import EXTRACT_TYPE, extract_frame, normalize_url_series, url_parts_frame, URL_PARTS_TYPE
-from ..operators.frontier import assign_seq, politeness_schedule, with_worker_bucket
+from ..operators.frontier import assign_seq, politeness_schedule
 from ..operators.materialize import release
 from ..operators.redirects import redirect_edges, resolve_redirect_chains
 from ..operators.seen import BloomSeen, new_urls
@@ -119,7 +119,7 @@ class CrawlEngine:
         robots_from_pages: bool = False,
         user_agent: str = DEFAULT_UA,
         per_host_budget: int = 8,
-        n_buckets: int = 32,
+        n_buckets: int = 32,  # unused; kept while perfbench/workloads.py passes it
         exact_robots: bool = True,
         use_bloom: bool = True,
         bloom_bits: int = 1 << 22,
@@ -150,7 +150,6 @@ class CrawlEngine:
             self.content_pages = pages
         self.user_agent = user_agent
         self.per_host_budget = per_host_budget
-        self.n_buckets = n_buckets
         self.exact_robots = exact_robots
         # Crawl-delay enforcement is an EXTENSION (off by default): the
         # reference parses Crawl-delay but never enforces it (Robots.hh:48);
@@ -551,10 +550,8 @@ class CrawlEngine:
         n_disallowed = n_disallowed or 0
 
         # 3. "fetch": join against pages on normalized url; HEAD folds into
-        # column pruning; politeness affinity + hot-host salting
-        allowed = with_worker_bucket(
-            gated.filter(F.col("allowed")).drop("allowed"), self.n_buckets
-        )
+        # column pruning
+        allowed = gated.filter(F.col("allowed")).drop("allowed")
         # 3a. redirect-chain resolution (crawler.cc:52,1094-1096): the
         # content lives at the chain's effective URL; cap/protocol
         # failures become curl-code stubs like every other fetch failure

@@ -18,7 +18,7 @@ to the reference by tests/test_lexer.py), so the end-to-end byte-identity
 invariant holds by construction.
 
 Host distribution is Zipf-ish with one hot host holding ~30% of URLs
-(politeness-budget and skew-salting exercise).
+(politeness-budget and hot-host skew exercise).
 """
 
 from __future__ import annotations

@@ -164,7 +164,6 @@ def main(argv=None) -> int:
             return crawl.CrawlEngine(
                 spark, os.path.join(work, "crawl"), pages, robots,
                 per_host_budget=sz["budget"], exact_robots=False,
-                n_buckets=2 * cores,
             )
 
         seed_rows, seen_urls = inputs.crawl_state(args.seed, n, sz["n_seeds"], sz["n_gone"])

@@ -17,7 +17,7 @@ from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 N_PAGES = 150
-ROUND_JOBS = 28  # jobs of one round of this fixture (test_round_job_count)
+ROUND_JOBS = 26  # jobs of one round of this fixture (test_round_job_count)
 
 
 @pytest.fixture(scope="module")
@@ -31,7 +31,7 @@ def corpus(spark):
 
 def make_engine(spark, tmpdir, pages, robots, **kw):
     return CrawlEngine(
-        spark, str(tmpdir), pages, robots, per_host_budget=4, n_buckets=8,
+        spark, str(tmpdir), pages, robots, per_host_budget=4,
         bloom_bits=1 << 16, **kw,
     )
 

@@ -48,13 +48,12 @@ def test_per_host_fifo_matches_classifier(spark, budget):
     )
     # for a static frontier the engine's multi-round schedule is fully
     # determined by host_pos: round k schedules host_pos in (k*B, (k+1)*B];
-    # equivalently per-host order == host_pos order. One job suffices —
-    # but exercise the salted plan for the budget cut itself.
+    # equivalently per-host order == host_pos order.
     eng_by_host = defaultdict(list)
-    scheduled, deferred = politeness_schedule(frontier, budget, salt=4)
+    scheduled, deferred = politeness_schedule(frontier, budget)
     first = scheduled.select("host", "host_pos", "url").collect()
     rest = (
-        politeness_schedule(deferred, 10**9, salt=1)[0]
+        politeness_schedule(deferred, 10**9)[0]
         .select("host", "host_pos", "url")
         .collect()
     )
@@ -71,15 +70,3 @@ def test_per_host_fifo_matches_classifier(spark, budget):
 
     # identical URL-seen set
     assert {u for v in eng_by_host.values() for u in v} == {u for _, u in order}
-
-
-def test_salted_schedule_equals_plain(spark):
-    # the two-phase skew plan must produce the identical scheduled set + order
-    rows = [(i, f"http://h{i % 7}.example/p{i}", f"h{i % 7}.example") for i in range(500)]
-    frontier = spark.createDataFrame(rows, ["seq", "url", "host"])
-    plain, pdef = politeness_schedule(frontier, 13, salt=1)
-    salted, sdef = politeness_schedule(frontier, 13, salt=8)
-    a = sorted((r.host, r.host_pos, r.url) for r in plain.collect())
-    b = sorted((r.host, r.host_pos, r.url) for r in salted.collect())
-    assert a == b
-    assert sorted(r.url for r in pdef.collect()) == sorted(r.url for r in sdef.collect())

@@ -3,7 +3,7 @@ mechanized): predicate pushdown reaches the parquet scan, column pruning
 holds, dims broadcast, aggregates have map-side partial phases, and no
 plan regresses to a BroadcastNestedLoopJoin or a Python eval node in a
 JVM-only operator. Complements the operator-specific pins
-(test_assign_seq, test_worker_bucket, test_ann_index)."""
+(test_assign_seq, test_ann_index)."""
 
 import pytest
 

@@ -47,7 +47,7 @@ def corpus(spark):
 
 def _run(spark, wd, pages, **kw):
     eng = CrawlEngine(
-        spark, str(wd), pages, per_host_budget=4, n_buckets=8,
+        spark, str(wd), pages, per_host_budget=4,
         bloom_bits=1 << 16, exact_robots=False, **kw,
     )
     eng.seed(synth.seeds(N_PAGES))

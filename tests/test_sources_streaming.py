@@ -175,7 +175,7 @@ def test_run_streaming_with_redirects(spark, tmp_path):
         for i in (7, 26, 1):  # 7 and 26 are redirect rows (id % 19 == 7)
             f.write(synth.url_of(i) + "\n")
     eng = CrawlEngine(
-        spark, str(tmp_path / "wd"), pages, per_host_budget=4, n_buckets=4,
+        spark, str(tmp_path / "wd"), pages, per_host_budget=4,
         bloom_bits=1 << 14,
     )
     q = seed_stream(
@@ -229,7 +229,7 @@ def test_run_streaming_two_waves_with_redirects(spark, tmp_path):
             f.write(synth.url_of(i) + "\n")
     eng = CrawlEngine(
         spark, str(tmp_path / "wd"), pages, per_host_budget=100,
-        n_buckets=4, bloom_bits=1 << 14,
+        bloom_bits=1 << 14,
     )
     eng.run_streaming(str(seed_dir), str(tmp_path / "ckpt"), max_rounds=1)
     docs1 = {r["url"]: r for r in eng.cat.read("docs").collect()}
