@@ -24,15 +24,20 @@ _PKG_ZIP: str | None = None
 
 def _ensure_workers_have_package(spark: SparkSession) -> None:
     """Ship the package to python workers regardless of the driver's cwd
-    (the UDF closures reference the mycelium_spark module by name)."""
+    (the UDF closures reference the mycelium_spark module by name). The
+    zip is built once per process in a temp dir removed at exit."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
+        import atexit
         import shutil
         import tempfile
 
-        base = os.path.join(tempfile.mkdtemp(prefix="mycelium_pkg_"), "mycelium_spark")
+        tmp = tempfile.mkdtemp(prefix="mycelium_pkg_")
+        atexit.register(shutil.rmtree, tmp, True)
         root = os.path.dirname(os.path.abspath(__file__))
-        _PKG_ZIP = shutil.make_archive(base, "zip", root, "mycelium_spark")
+        _PKG_ZIP = shutil.make_archive(
+            os.path.join(tmp, "mycelium_spark"), "zip", root, "mycelium_spark"
+        )
     try:
         spark.sparkContext.addPyFile(_PKG_ZIP)
     except Exception:
@@ -40,33 +45,32 @@ def _ensure_workers_have_package(spark: SparkSession) -> None:
     _tune_session(spark)
 
 
+# Plan-quality session settings (spark_optimization_guide §3.1/§9). Scale-safe
+# — none of them depends on the local core count. Results are unaffected
+# (join strategy and rank-limit pushdown are semantics-preserving); they change
+# only the physical plan:
+_SESSION_CONFS = (
+    # lets the planner pick a shuffled-hash join when its size guard holds
+    # (skips two whole-side sorts; the guard bounds the build-side hash map,
+    # so it stays safe as inputs grow)
+    ("spark.sql.join.preferSortMergeJoin", "false"),
+    # covers `row_number() <= k` filters up to the politeness budget (the
+    # default threshold 1000 is below it); the pushdown's per-task state is
+    # bounded by k rows per group
+    ("spark.sql.optimizer.windowGroupLimitThreshold", "8192"),
+    # AQE may rewrite a planned sort-merge join to shuffled-hash at runtime
+    # when EVERY post-shuffle partition's build side is under this many bytes
+    # (default 0 = never) — skips both sort passes. Self-guarding at scale:
+    # bigger-than-threshold partitions keep sort-merge, so memory stays
+    # bounded by the threshold itself.
+    ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864"),
+)
+
+
 def _tune_session(spark: SparkSession) -> None:
-    """Plan-quality session settings (spark_optimization_guide §3.1/§9).
-
-    Scale-safe — none of these depend on the local core count, and all are
-    env-overridable. Results are unaffected (join strategy and rank-limit
-    pushdown are semantics-preserving); they change only the physical plan:
-
-    * preferSortMergeJoin=false lets the planner pick a shuffled-hash join
-      when its size guard holds (skips two whole-side sorts; guard bounds
-      the build-side hash map, so it stays safe as inputs grow);
-    * windowGroupLimitThreshold covers `row_number() <= k` filters up to
-      the politeness budget (default threshold 1000 is below it); the
-      pushdown's per-task state is bounded by k rows per group.
-    """
-    for conf, default in (
-        ("spark.sql.join.preferSortMergeJoin", "false"),
-        ("spark.sql.optimizer.windowGroupLimitThreshold", "8192"),
-        # AQE may rewrite a planned sort-merge join to shuffled-hash at
-        # runtime when EVERY post-shuffle partition's build side is under
-        # this many bytes (default 0 = never) — skips both sort passes.
-        # Self-guarding at scale: bigger-than-threshold partitions keep
-        # sort-merge, so memory stays bounded by the threshold itself.
-        ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864"),
-    ):
-        key = "SPARK_GRAFT_" + conf.rsplit(".", 1)[-1].upper()
+    for conf, value in _SESSION_CONFS:
         try:
-            spark.conf.set(conf, os.environ.get(key, default))
+            spark.conf.set(conf, value)
         except Exception:
             pass  # read-only conf on this build: keep defaults
 

@@ -192,18 +192,24 @@ class Robots:
             return (length, order, kind, m)
         return best
 
-    def path_allowed(self, user_agent: bytes | str, p: bytes | str) -> bool:
-        """Robots.cc:47-68 — first matching UA group, first matching rule."""
+    def ua_groups(self, user_agent: bytes | str):
+        """The groups naming ``user_agent`` or ``*``, in file order
+        (Robots.cc:50-52)."""
         if isinstance(user_agent, str):
             user_agent = user_agent.encode("utf-8")
+        return (g for g in self.groups if any(ua in (user_agent, b"*") for ua in g.ua))
+
+    def ua_rules(self, user_agent: bytes | str) -> list[tuple[int, bytes]]:
+        """The rules that decide every path for ``user_agent``: those of the
+        first matching group, in order; none when no group matches."""
+        return next((g.rules for g in self.ua_groups(user_agent)), [])
+
+    def path_allowed(self, user_agent: bytes | str, p: bytes | str) -> bool:
+        """Robots.cc:47-68 — first matching UA group, first matching rule."""
         path = canon_path(p)
-        for group in self.groups:
-            for ua in group.ua:
-                if ua == user_agent or ua == b"*":
-                    for rtype, rule in group.rules:
-                        if self._rule_matches(rule, path):
-                            return rtype == RuleType.ALLOW
-                    return True
+        for rtype, rule in self.ua_rules(user_agent):
+            if self._rule_matches(rule, path):
+                return rtype == RuleType.ALLOW
         return True
 
     def _rule_matches(self, rule: bytes, path: bytes) -> bool:
@@ -216,17 +222,13 @@ class Robots:
 
     def crawl_delay(self, user_agent: bytes | str = b"*") -> float | None:
         """Parsed but NEVER enforced by the reference (Robots.hh:48)."""
-        if isinstance(user_agent, str):
-            user_agent = user_agent.encode("utf-8")
-        for group in self.groups:
-            for ua in group.ua:
-                if ua == user_agent or ua == b"*":
-                    for rtype, rule in group.rules:
-                        if rtype == RuleType.CRAWL_DELAY:
-                            try:
-                                return float(rule)
-                            except ValueError:
-                                return None
+        for group in self.ua_groups(user_agent):
+            for rtype, rule in group.rules:
+                if rtype == RuleType.CRAWL_DELAY:
+                    try:
+                        return float(rule)
+                    except ValueError:
+                        return None
         return None
 
 
@@ -250,16 +252,3 @@ def robots_state_for(status: int, txt: bytes | str | None, exact_match: bool = T
             return RobotsState.PRESENT, r
         return RobotsState.EPARSE, None
     return RobotsState.NOT_AVAILABLE, None
-
-
-def rules_rows(host: str, robots: Robots) -> list[tuple]:
-    """Flatten to broadcastable rows (host, group_idx, ua_list, rule_order,
-    rule_type, rule_path) for the robots_rules DataFrame."""
-    rows = []
-    for gi, group in enumerate(robots.groups):
-        uas = [u.decode("latin-1") for u in group.ua]
-        for ri, (rtype, rule) in enumerate(group.rules):
-            rows.append((host, gi, uas, ri, int(rtype), rule.decode("latin-1")))
-        if not group.rules:
-            rows.append((host, gi, uas, -1, -1, None))
-    return rows

@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 
 from .headers import acceptable, parse_http_headers
 from .lexer import html_lex
+from .robots import canon_path
 from .url import BadUrl, Url
 
 # --- canonical-form fast path -------------------------------------------
@@ -75,6 +76,21 @@ def url_host_series(urls: pd.Series) -> pd.Series:
             return None
         try:
             return Url(u).host().decode("latin-1")
+        except BadUrl:
+            return None
+
+    return urls.astype("object").map(f)
+
+
+def canon_path_series(urls: pd.Series) -> pd.Series:
+    """The robots-canonical path of each URL, ``canon_path(Url(u).path())``
+    (Robots.cc:49), latin-1 decoded; invalid → None."""
+
+    def f(u):
+        if u is None:
+            return None
+        try:
+            return canon_path(Url(u).path()).decode("latin-1")
         except BadUrl:
             return None
 

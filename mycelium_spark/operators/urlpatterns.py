@@ -75,7 +75,7 @@ def url_patterns(
         F.col(url_col).alias("url"),
     )
     # Two deliberate scale choices, both measured at 20-100M rows
-    # (scripts/scale_rehearsal_r5b.py):
+    # (git show 9cca455:scripts/scale_rehearsal_r5b.py):
     # 1. distinct by 64-bit md5 prefix, not the URL string — the
     #    distinct keys are fixed 16-byte values instead of full URLs
     #    (same convention in the twin, so exactness holds; 64-bit

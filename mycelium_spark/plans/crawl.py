@@ -4,7 +4,7 @@ The reference's event-loop state machine (IDLE→ROBOTS→NEXT→HEAD→CONTENT,
 crawler.cc:860-1064) collapses into deterministic batch rounds:
 
     frontier ──politeness budget──▶ scheduled
-      scheduled ⋈ broadcast(robots_rules) ──allow filter──▶ allowed
+      scheduled ⟕ broadcast(robots_rules) ──first matching rule──▶ allowed
       allowed ⋈ pages (on normalized url) ──"HEAD+GET"──▶ fetched
       fetched ──content-type + 1 MiB cap──▶ extract UDF ──▶ docs, links
       links ∖ seen ──Bloom prefilter + exact anti-join──▶ next frontier
@@ -12,7 +12,10 @@ crawler.cc:860-1064) collapses into deterministic batch rounds:
 Parity mapping:
 * robots gate: allowed iff no robots row / NOT_AVAILABLE / EPARSE
   ("tried_but_failed" ⇒ allowed, Robots.hh:189-192) or PRESENT and
-  ``path_allowed(ua, url.path())`` — path only, no query (crawler.cc:1041);
+  ``path_allowed(ua, url.path())`` — path only, no query (crawler.cc:1041).
+  The UA is fixed per engine, so each host reduces to the ordered rules
+  of its first matching UA group; the gate is a native first-match over
+  that array, fed by one canon-path UDF per scheduled url;
 * the HEAD probe (crawler.cc:1163-1204) disappears: Parquet/Iceberg column
   pruning reads only the metadata columns until ``html`` is needed (P5);
 * the 1 MiB content cap (crawler.cc:55,579-583) is a length filter;
@@ -22,10 +25,11 @@ Parity mapping:
   the Mongo upsert (Doc.cc:79) becomes Iceberg MERGE at scale, or
   ``row_number() OVER (PARTITION BY url ORDER BY round DESC) = 1`` on read.
 
-Execution: static inputs are prepared once per engine — the parsed robots
-rules, and the chain closure of the redirect edge table (every redirecting
-url resolved to its effective url, hop count and failure code), so a round
-resolves its chains with one left join. Within a round, each intermediate
+Execution: static inputs are prepared once per engine — each host's
+robots rules and Crawl-delay for the engine's UA, and the chain closure
+of the redirect edge table (every redirecting url resolved to its
+effective url, hop count and failure code), so a round resolves its
+chains with one left join. Within a round, each intermediate
 with more than one consumer (the robots-gated schedule, the fetched +
 extracted working set, links, the dedup frame, the new frontier rows,
 ``next_frontier``) executes exactly once behind a lazy local checkpoint.
@@ -50,15 +54,17 @@ the metrics table every round.
 
 from __future__ import annotations
 
-import json
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
-from ..functions.robots import Robots, RobotsState, robots_state_for
-from ..functions.udfs import EXTRACT_TYPE, extract_frame, normalize_url_series, url_parts_frame, URL_PARTS_TYPE
+from ..functions.robots import Robots, RuleType, robots_state_for
+from ..functions.udfs import (
+    EXTRACT_TYPE, URL_PARTS_TYPE, canon_path_series, extract_frame, normalize_url_series,
+    url_parts_frame,
+)
 from ..operators.frontier import assign_seq, politeness_schedule
 from ..operators.materialize import release
 from ..operators.redirects import redirect_edges, resolve_redirect_chains
@@ -69,42 +75,54 @@ DEFAULT_UA = "mycelium web crawler - https://github.com/larroy/mycelium"  # craw
 CONTENT_SIZE_LIMIT = 1 << 20  # crawler.cc:55
 
 
-def parse_robots_rows(pdf_iter, exact_match: bool):
-    """mapInPandas kernel: (host, status, robots_txt) → (host, state, groups_json)."""
+def gate_rules(robots: Robots, user_agent: str) -> list[tuple[bool, str]]:
+    """The (allow, rule) pairs that decide every path of a host for
+    ``user_agent``, in match order. A Crawl-delay rule is kept as a
+    disallow whose rule is the delay value (Robots.cc:57-60)."""
+    return [
+        (rtype == RuleType.ALLOW, rule.decode("latin-1"))
+        for rtype, rule in robots.ua_rules(user_agent)
+    ]
+
+
+def robots_allowed(rules, path, exact_match: bool):
+    """Native gate over ``rules``, an array<struct<allow boolean, rule
+    string>> of ``gate_rules`` pairs: the first rule matching ``path``
+    decides, and no match (or null rules) means allowed. Exact mode
+    compares the whole rule (Robots.cc:56); prefix mode skips empty
+    rules."""
+
+    def match(r):
+        if exact_match:
+            return r["rule"] == path
+        return (r["rule"] != "") & path.startswith(r["rule"])
+
+    return F.coalesce(F.get(F.filter(rules, match), 0)["allow"], F.lit(True))
+
+
+def parse_robots_rows(pdf_iter, exact_match: bool, user_agent: str):
+    """mapInPandas kernel: (host, status, robots_txt) → (host, rules,
+    delay) for the hosts whose robots.txt is PRESENT and names rules or a
+    Crawl-delay for ``user_agent``. Every other host is allowed
+    everywhere with no delay ("tried_but_failed" ⇒ allowed,
+    Robots.hh:189-192), so it needs no row. A delay that is not a
+    positive finite number is no delay."""
     for pdf in pdf_iter:
-        states, groups = [], []
-        for status, txt in zip(pdf["status"], pdf["robots_txt"]):
-            state, robots = robots_state_for(
+        hosts, rules, delays = [], [], []
+        for host, status, txt in zip(pdf["host"], pdf["status"], pdf["robots_txt"]):
+            _, robots = robots_state_for(
                 int(status), txt.encode() if isinstance(txt, str) else txt, exact_match
             )
-            states.append(int(state))
             if robots is None:
-                groups.append(None)
-            else:
-                groups.append(
-                    json.dumps(
-                        [
-                            {
-                                "ua": [u.decode("latin-1") for u in g.ua],
-                                "rules": [[int(t), r.decode("latin-1")] for t, r in g.rules],
-                            }
-                            for g in robots.groups
-                        ]
-                    )
-                )
-        yield pd.DataFrame({"host": pdf["host"], "state": states, "groups_json": groups})
-
-
-def _robots_from_json(groups_json: str, exact_match: bool) -> Robots:
-    r = Robots(exact_match=exact_match)
-    from ..functions.robots import UasRules
-
-    for g in json.loads(groups_json):
-        gr = UasRules()
-        gr.ua = [u.encode("latin-1") for u in g["ua"]]
-        gr.rules = [(t, p.encode("latin-1")) for t, p in g["rules"]]
-        r.groups.append(gr)
-    return r
+                continue
+            r = gate_rules(robots, user_agent)
+            d = robots.crawl_delay(user_agent)
+            d = d if d is not None and 0 < d < math.inf else None
+            if r or d is not None:
+                hosts.append(host)
+                rules.append(r)
+                delays.append(d)
+        yield pd.DataFrame({"host": hosts, "rules": rules, "delay": delays}, dtype=object)
 
 
 class CrawlEngine:
@@ -219,18 +237,12 @@ class CrawlEngine:
         )
 
     def _parse_robots(self, rows: DataFrame) -> DataFrame:
-        """(host, status, robots_txt) → materialized (host, state, groups_json)."""
-        from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("host", StringType()),
-                StructField("state", IntegerType()),
-                StructField("groups_json", StringType()),
-            ]
-        )
-        exact = self.exact_robots
-        rules = rows.mapInPandas(lambda it: parse_robots_rows(it, exact), schema).cache()
+        """(host, status, robots_txt) → materialized (host, rules, delay)."""
+        exact, ua = self.exact_robots, self.user_agent
+        rules = rows.mapInPandas(
+            lambda it: parse_robots_rows(it, exact, ua),
+            "host string, rules array<struct<allow:boolean,rule:string>>, delay double",
+        ).cache()
         rules.count()
         return rules
 
@@ -385,83 +397,34 @@ class CrawlEngine:
         return int(self.cat.meta("frontier").get("round", 0))
 
     def _robots_gate(self, scheduled: DataFrame) -> DataFrame:
-        """``scheduled`` plus a boolean ``allowed`` column."""
+        """``scheduled`` plus a boolean ``allowed`` column: the host's
+        rules decide the url's path — path only, no query (crawler.cc:1041)."""
         if self.robots_rules is None:
             return scheduled.withColumn("allowed", F.lit(True))
-        exact = self.exact_robots
-        ua = self.user_agent
-
-        def allowed_fn(paths: pd.Series, states: pd.Series, groups: pd.Series) -> pd.Series:
-            cache: dict[str, Robots] = {}
-            out = []
-            for path, state, gj in zip(paths, states, groups):
-                if state is None or pd.isna(state):
-                    out.append(True)  # no robots row → EMPTY → fetch proceeds
-                    continue
-                state = int(state)
-                if state in (int(RobotsState.NOT_AVAILABLE), int(RobotsState.EPARSE)):
-                    out.append(True)  # tried_but_failed ⇒ allowed
-                elif state == int(RobotsState.PRESENT):
-                    if gj is None:
-                        out.append(True)
-                        continue
-                    robots = cache.get(gj)
-                    if robots is None:
-                        robots = _robots_from_json(gj, exact)
-                        cache[gj] = robots
-                    out.append(robots.path_allowed(ua, path))
-                else:
-                    out.append(True)
-            return pd.Series(out)
-
-        allowed_udf = F.pandas_udf(allowed_fn, BooleanType())
-        parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
+        path_udf = F.pandas_udf(canon_path_series, "string")
         return (
-            scheduled.join(F.broadcast(self.robots_rules), "host", "left")
-            .withColumn("path", parts_udf("url").getField("path"))
-            .withColumn("allowed", allowed_udf("path", "state", "groups_json"))
-            .drop("state", "groups_json", "path")
+            scheduled.join(F.broadcast(self.robots_rules.select("host", "rules")), "host", "left")
+            .withColumn("_path", path_udf("url"))
+            .withColumn("allowed", robots_allowed("rules", F.col("_path"), self.exact_robots))
+            .drop("rules", "_path")
         )
 
     def _host_budgets(self, rnd: int) -> DataFrame:
-        """(host, _budget) from parsed robots Crawl-delay for our UA —
-        only hosts that declare a delay appear (others default upstream).
+        """(host, _budget) from the parsed Crawl-delay for our UA — only
+        hosts that declare a delay appear (others default upstream).
 
         delay <= round_period: the host gets floor(period/delay) fetches
         per round (capped). delay > round_period: flooring at 1 would cap
         the effective delay at the round period (under-enforcement), so
         the host is instead scheduled only every ceil(delay/period)-th
         round — budget 1 when ``rnd % stride == 0``, else 0 (deferred)."""
-        import math
-
-        from pyspark.sql.types import IntegerType
-
-        exact = self.exact_robots
-        ua = self.user_agent
-        cap = self.per_host_budget
-        period = self.round_period_sec
-
-        def budget_fn(states: pd.Series, groups: pd.Series) -> pd.Series:
-            out = []
-            for state, gj in zip(states, groups):
-                if gj is None or state is None or int(state) != int(RobotsState.PRESENT):
-                    out.append(None)
-                    continue
-                delay = _robots_from_json(gj, exact).crawl_delay(ua)
-                if delay is None or delay <= 0:
-                    out.append(None)
-                elif delay <= period:
-                    out.append(max(1, min(cap, int(period / delay))))
-                else:
-                    stride = math.ceil(delay / period)
-                    out.append(1 if rnd % stride == 0 else 0)
-            return pd.Series(out, dtype="object")
-
-        budget_udf = F.pandas_udf(budget_fn, IntegerType())
-        return (
-            self.robots_rules.withColumn("_budget", budget_udf("state", "groups_json"))
-            .filter(F.col("_budget").isNotNull())
-            .select("host", "_budget")
+        delay, period = F.col("delay"), F.lit(self.round_period_sec)
+        budget = F.when(
+            delay <= period,
+            F.greatest(F.lit(1), F.least(F.lit(self.per_host_budget), F.floor(period / delay))),
+        ).otherwise((F.lit(rnd) % F.ceil(delay / period) == 0).cast("int"))
+        return self.robots_rules.filter(delay.isNotNull()).select(
+            "host", budget.cast("int").alias("_budget")
         )
 
     def dedup_candidates(
@@ -532,7 +495,7 @@ class CrawlEngine:
 
         # 1. politeness budget (optionally Crawl-delay-scaled per host)
         if self.enforce_crawl_delay and self.robots_rules is not None:
-            budgets = hold(self._host_budgets(r))
+            budgets = self._host_budgets(r)
             gated_frontier = frontier.join(F.broadcast(budgets), "host", "left").withColumn(
                 "_budget", F.coalesce(F.col("_budget"), F.lit(self.per_host_budget))
             )
@@ -542,7 +505,7 @@ class CrawlEngine:
         else:
             scheduled, deferred = politeness_schedule(frontier, self.per_host_budget)
 
-        # 2. robots gate: one job runs the gate UDFs and yields both counts
+        # 2. robots gate: one job runs the canon-path UDF and yields both counts
         gated = hold(self._robots_gate(scheduled))
         n_scheduled, n_disallowed = gated.agg(
             F.count(F.lit(1)), F.sum((~F.col("allowed")).cast("int"))

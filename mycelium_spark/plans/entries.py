@@ -56,6 +56,7 @@ from ..operators import (
 )
 from ..functions.robots import parse_robots
 from ..sources import sitemap, warc
+from .crawl import gate_rules, robots_allowed
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -327,21 +328,20 @@ def html_extract_text(spark, sf_dir):
 )
 def robots_gate_prefix(spark, sf_dir):
     """R1-R2 (documented prefix mode): gate constructed paths through a
-    parsed robots.txt; the oracle knows the closed-form answer."""
+    parsed robots.txt with the crawl's native gate, over a literal rules
+    array; the oracle knows the closed-form answer. The paths hold no
+    ``%``, so ``canon_path`` is the identity on them and they are gated
+    as built."""
     docs = _read(spark, sf_dir, "documents")
-    robots_txt = b"User-agent: *\nDisallow: /d3/\nDisallow: /d5/ # comment\n"
-
-    from pyspark.sql.types import BooleanType
-
-    def gate(paths: pd.Series) -> pd.Series:
-        r = parse_robots(robots_txt, exact_match=False)
-        return pd.Series([r.path_allowed(b"*-bot", p) for p in paths])
-
-    gate_udf = F.pandas_udf(gate, BooleanType())
+    robots = parse_robots(b"User-agent: *\nDisallow: /d3/\nDisallow: /d5/ # comment\n")
+    rules = F.array(*[
+        F.struct(F.lit(allow).alias("allow"), F.lit(rule).alias("rule"))
+        for allow, rule in gate_rules(robots, "*-bot")
+    ])
     return docs.select(
         "doc_id",
         F.concat(F.lit("/d"), (F.col("doc_id") % 7).cast("string"), F.lit("/x.html")).alias("path"),
-    ).withColumn("allowed", gate_udf("path"))
+    ).withColumn("allowed", robots_allowed(rules, F.col("path"), exact_match=False))
 
 
 @register(
