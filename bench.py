@@ -268,13 +268,14 @@ def cluster_job(spark, n_edges: int = 2_000_000) -> dict:
 def redirect_job(spark, n_urls: int = 5_000_000) -> dict:
     """Redirect-chain resolution at bench scale: the driver-entry edge
     construction (1/101 self-loops → over-cap 47s, chains of 1-5 hops via
-    id % 13 < 5) over an all-JVM synthetic frontier. ~62% of URLs have no
-    edge and finalize on the first join; the per-hop merge/normalize UDF
-    only ever sees still-matching rows, so hops 2+ shrink geometrically —
-    the shape that holds at 10^10."""
+    id % 13 < 5) over an all-JVM synthetic frontier. The chain closure of
+    the edges (~38% of the URLs) is built by pointer jumping — the
+    merge/normalize UDF runs once per edge, then a fixed four joins over
+    the edge set whatever the chain lengths — and the URLs are looked up
+    in it with one left join (~62% have no edge)."""
     from pyspark.sql import functions as F
 
-    from mycelium_spark.operators.redirects import resolve_redirect_chains
+    from mycelium_spark.operators.redirects import chain_closure, resolve_redirect_chains
 
     def url(idc):
         return F.concat(
@@ -290,7 +291,7 @@ def redirect_job(spark, n_urls: int = 5_000_000) -> dict:
     )
     t0 = time.time()
     row = (
-        resolve_redirect_chains(urls, edges)
+        resolve_redirect_chains(urls, chain_closure(edges))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("hops") > 0, 1).otherwise(0)).alias("redirected"),

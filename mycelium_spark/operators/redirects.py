@@ -1,5 +1,5 @@
 """Redirect-chain resolution — the ``eff_url`` behavior of the reference's
-fetch path, re-expressed as a bounded iterative join.
+fetch path, re-expressed as a chain closure built by pointer jumping.
 
 Reference semantics (all /root/reference/src/crawler/crawler.cc):
 * curl follows Location redirects transparently with ``CURLOPT_MAXREDIRS``
@@ -18,39 +18,36 @@ column holds the Location header value (possibly relative — resolved
 against the current URL via the F9 merge_ref kernel, which is what curl
 does per RFC 7231 §7.1.2).
 
-``resolve_redirect_chains`` takes the raw (r_src, r_dst) edge table and
-resolves a batch of URLs in two steps:
+A chain is a function of its start URL, so resolution is two steps:
 
-* it prepares the edges once per call: a hop only ever leaves an edge's
-  source, so each edge's next URL (merge_ref + normalize of its Location
-  against ``r_src``) and the REDIR_PROTOCOLS check are functions of the
-  edge alone. They are computed once and materialized; the call
-  releases them before it returns;
-* a driver-side loop of at most ``max_redirs + 1`` hash joins between
-  the in-flight rows and the prepared edges, with no Python in the loop.
-  Each hop is materialized once and the loop stops as soon as no row is
-  in flight, so the number of hops follows the longest chain in the
-  batch, capped by the protocol constant.
+* ``chain_closure(edges)`` resolves the chain of every edge source of a
+  raw (r_src, r_dst) edge table. It follows each edge once (merge_ref +
+  normalize + the REDIR_PROTOCOLS check are functions of the edge
+  alone), then doubles walks instead of stepping them: a walk row
+  ``(url, eff_url, hops, redirect_code)`` composed with the walk that
+  starts at its ``eff_url`` covers both, so the 1-hop table gives 2-,
+  then 4-, then 5-hop walks, and one last lookup marks a walk whose
+  5th URL still redirects as 47. Four left joins, whatever the chain
+  lengths;
+* ``resolve_redirect_chains(urls, chains)`` looks a batch up in the
+  closure with one left join: a URL with no closure row does not
+  redirect. The crawl engine builds the closure once per engine and
+  looks each round up in it; batch callers (the ``redirect_resolve``
+  query, ``bench.py``) build it over their own edges.
 
-A chain is a function of its start URL, so over a static edge table the
-crawl engine makes one call, on the distinct ``r_src`` of the edges: the
-result is the table's chain closure, and resolving a batch is then one
-left join against it (a URL with no closure row does not redirect).
-Batch callers without a fixed edge table (the ``redirect_resolve``
-query, ``bench.py``) call ``resolve_redirect_chains`` on their batch.
-
-Intermediate-hop URLs are normalized before each join (the pages table is
-keyed by normalized URL); the reference normalizes only the final
-effective URL, but every Location curl follows passes through the same
-URL parser, so the composed normalization is behavior-identical for URLs
-both engines accept.
+Intermediate-hop URLs are normalized when their edge is followed (the
+pages table is keyed by normalized URL); the reference normalizes only
+the final effective URL, but every Location curl follows passes through
+the same URL parser, so the composed normalization is behavior-identical
+for URLs both engines accept.
 
 Scale notes (10^10 frontier): the redirect edge set is a projection of the
-pages table (two string columns); each hop join shuffles only the
-in-flight rows on their current effective URL — same key distribution as
-the frontier⋈pages content join, AQE handles skew. In-flight rows shrink
-monotonically (only rows that matched a redirect survive a hop), so hops
-after the first join a small fraction of the batch.
+pages table (two string columns), and every walk table has one row per
+edge source, so each composition shuffles the edge set twice at most
+(the 1-hop table's shuffle on url is shared by the three compositions
+that read it). The lookup shuffles the batch on url like the
+frontier⋈pages content join; adaptive execution broadcasts a small
+closure and handles skew.
 """
 
 from __future__ import annotations
@@ -135,79 +132,81 @@ def _follow_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _prepare_redirect_edges(edges: DataFrame) -> DataFrame:
-    """Follow every (r_src, r_dst) edge once, as an eager local
-    checkpoint, so no hop join re-runs the follow kernel. The checkpoint
-    is not partitioned by ``r_src``: under adaptive execution Spark 4.1
-    reports a checkpoint's partitioning as unknown, so each hop join
-    plans its own exchange of the edge side either way."""
-    return _follow_edges(edges).localCheckpoint()
+def _walks(edges: DataFrame) -> DataFrame:
+    """The 1-hop walk table of (r_src, r_dst) edges, one row per edge:
+    ``(url, eff_url, hops, redirect_code)``. ``redirect_code`` is null
+    while ``eff_url`` has not been looked up (the walk is in flight), and
+    1 at a bad edge, which the walk does not take."""
+    nxt = F.col("r_next")
+    return _follow_edges(edges).select(
+        F.col("r_src").alias("url"),
+        F.coalesce(nxt, F.col("r_src")).alias("eff_url"),
+        nxt.isNotNull().cast("int").alias("hops"),
+        F.when(nxt.isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)).alias("redirect_code"),
+    )
 
 
-def resolve_redirect_chains(
-    urls_df: DataFrame,
-    edges: DataFrame,
-    max_redirs: int = MAXREDIRS,
-    url_col: str = "url",
-) -> DataFrame:
-    """Resolve every row's redirect chain to its effective URL.
+def _compose(walks: DataFrame, step: DataFrame) -> DataFrame:
+    """Extend every in-flight walk by the ``step`` walk that starts at its
+    ``eff_url``: no step row means no edge there (code 0); a step from a
+    walk already ``MAXREDIRS`` hops long exceeds the cap (47, the walk
+    keeps the state before it). A finished walk is kept as it is."""
+    s = step.select(*(F.col(c).alias(f"s_{c}") for c in step.columns))
+    fly = F.col("redirect_code").isNull()
+    hit = fly & F.col("s_url").isNotNull()
+    take = hit & (F.col("hops") < MAXREDIRS)
+    return walks.join(s, walks["eff_url"] == s["s_url"], "left").select(
+        "url",
+        F.when(take, F.col("s_eff_url")).otherwise(F.col("eff_url")).alias("eff_url"),
+        F.when(take, F.col("hops") + F.col("s_hops")).otherwise(F.col("hops")).alias("hops"),
+        F.when(~fly, F.col("redirect_code"))
+        .when(take, F.col("s_redirect_code"))
+        .when(hit, F.lit(CURLE_TOO_MANY_REDIRECTS))
+        .otherwise(F.lit(0))
+        .alias("redirect_code"),
+    )
 
-    ``urls_df``: any DataFrame with normalized URLs in ``url_col`` (all
-    other columns ride along). ``edges``: (r_src, r_dst) — r_src
-    normalized, r_dst a raw Location value; they are prepared for this
-    call and released before it returns.
 
-    Returns the input columns plus:
-      * ``eff_url``  — final URL reached (== ``url_col`` when no redirect;
-        on failure, the last URL reached before the failing hop);
-      * ``hops``     — redirects followed;
-      * ``redirect_code`` — 0 ok, 47 too many redirects, 1 unsupported
-        redirect protocol / unparseable Location.
+def chain_closure(edges: DataFrame) -> DataFrame:
+    """``(url, eff_url, hops, redirect_code)`` for every source url of the
+    raw (r_src, r_dst) edges: r_src normalized, r_dst a Location value.
+    ``eff_url`` is the final URL reached (on failure, the last URL reached
+    before the failing hop), ``hops`` the redirects followed, and
+    ``redirect_code`` 0 ok, 47 too many redirects, 1 unsupported redirect
+    protocol / unparseable Location.
 
-    Eager: each hop's rows sit behind a lazy local checkpoint (so the
-    join executes once however many branches read it), materialized by
-    the action that counts the rows still in flight; the loop ends when
-    none are. The result is a union over those hops; free their
-    blocks with ``materialize.release`` on the result when done with it.
-    """
-    prepared = _prepare_redirect_edges(edges)
+    The 1-hop table is composed into 2- and 4-hop walks, then 4 + 1 =
+    ``MAXREDIRS``-hop walks (a composition never passes the cap); a last
+    composition with the 1-hop table marks a walk whose 5th URL still
+    has an edge as 47. The result is an eager local checkpoint; free it
+    with ``materialize.release`` on any frame that scans it."""
+    one = _walks(edges).localCheckpoint(eager=False)
     try:
-        in_flight = F.col("redirect_code").isNull()
-        active = urls_df.withColumn("eff_url", F.col(url_col)).withColumn(
-            "hops", F.lit(0)
-        )
-        steps: list[DataFrame] = []
-        for hop in range(max_redirs + 1):
-            code = F.when(F.col("r_src").isNull(), F.lit(0))
-            if hop == max_redirs:
-                # a pending hop #max_redirs+1 exceeds CURLOPT_MAXREDIRS
-                code = code.otherwise(F.lit(CURLE_TOO_MANY_REDIRECTS))
-            else:
-                code = code.when(
-                    F.col("r_next").isNull(), F.lit(CURLE_UNSUPPORTED_PROTOCOL)
-                )
-            # a failing hop keeps the state before it; a followed hop advances
-            step = (
-                active.join(prepared, active["eff_url"] == prepared["r_src"], "left")
-                .withColumn("redirect_code", code)
-                .withColumn(
-                    "eff_url",
-                    F.when(in_flight, F.col("r_next")).otherwise(F.col("eff_url")),
-                )
-                .withColumn("hops", F.col("hops") + in_flight.cast("int"))
-                .drop("r_src", "r_next")
-                .localCheckpoint(eager=False)
-            )
-            steps.append(step)
-            active = step.filter(in_flight)
-            if active.count() == 0:
-                break
-        out = steps[0].filter(~in_flight)
-        for step in steps[1:]:
-            out = out.unionByName(step.filter(~in_flight))
-        return out
+        two = _compose(one, one)
+        four = _compose(two, two)
+        return _compose(_compose(four, one), one).localCheckpoint()
     finally:
-        release(prepared)
+        release(one)
+
+
+def resolve_redirect_chains(urls: DataFrame, chains: DataFrame | None) -> DataFrame:
+    """``urls`` (normalized ``url`` plus any columns, which ride along)
+    with ``eff_url``, ``hops`` and ``redirect_code`` looked up in
+    ``chains``, a ``chain_closure``; None means no url redirects. A url
+    with no closure row is its own effective url, with 0 hops and code 0.
+    Adaptive execution plans the join from the runtime sizes (a small
+    closure is broadcast)."""
+    if chains is None:
+        return urls.select(
+            "*", F.col("url").alias("eff_url"), F.lit(0).alias("hops"),
+            F.lit(0).alias("redirect_code"),
+        )
+    return urls.join(chains, "url", "left").select(
+        *urls.columns,
+        F.coalesce("eff_url", "url").alias("eff_url"),
+        F.coalesce("hops", F.lit(0)).alias("hops"),
+        F.coalesce("redirect_code", F.lit(0)).alias("redirect_code"),
+    )
 
 
 def resolve_redirects_sql(

@@ -28,8 +28,9 @@ Parity mapping:
 Execution: static inputs are prepared once per engine — each host's
 robots rules and Crawl-delay for the engine's UA, and the chain closure
 of the redirect edge table (every redirecting url resolved to its
-effective url, hop count and failure code), so a round resolves its
-chains with one left join. Within a round, each intermediate
+effective url, hop count and failure code, by pointer jumping in a fixed
+four joins: operators/redirects.py), so a round resolves its chains with
+one left join. Within a round, each intermediate
 with more than one consumer (the robots-gated schedule, the fetched +
 extracted working set, links, the dedup frame, the new frontier rows,
 ``next_frontier``) executes exactly once behind a lazy local checkpoint.
@@ -62,14 +63,14 @@ from pyspark.sql import functions as F
 
 from ..functions.robots import Robots, RuleType, robots_state_for
 from ..functions.udfs import (
-    EXTRACT_TYPE, URL_PARTS_TYPE, canon_path_series, extract_frame, normalize_url_series,
-    url_parts_frame,
+    EXTRACT_TYPE, URL_PARTS_TYPE, canon_path_series, extract_frame, url_parts_frame,
 )
 from ..operators.frontier import assign_seq, politeness_schedule
 from ..operators.materialize import release
-from ..operators.redirects import redirect_edges, resolve_redirect_chains
+from ..operators.redirects import chain_closure, redirect_edges, resolve_redirect_chains
 from ..operators.seen import BloomSeen, new_urls
 from ..sources.catalog import Catalog
+from ..streaming.seed_stream import parse_seed_lines
 
 DEFAULT_UA = "mycelium web crawler - https://github.com/larroy/mycelium"  # crawler.cc:294
 CONTENT_SIZE_LIMIT = 1 << 20  # crawler.cc:55
@@ -153,13 +154,10 @@ class CrawlEngine:
         # of 3xx rows). Redirect rows are edges, not content — the content
         # join sees only non-redirecting rows. The edge table is static and
         # a chain is a function of its start url, so the chains of every
-        # redirecting url (the closure) are resolved once per engine, and
-        # held as the union of the resolver's materialized hops.
+        # redirecting url (the closure) are resolved once per engine and
+        # held behind the closure's checkpoint.
         if "redirect_to" in pages.columns:
-            edges = redirect_edges(pages)
-            self.chains = resolve_redirect_chains(
-                edges.select(F.col("r_src").alias("url")).distinct(), edges
-            )
+            self.chains = chain_closure(redirect_edges(pages))
             self.content_pages = pages.filter(
                 F.col("redirect_to").isNull()
             ).drop("redirect_to")
@@ -219,23 +217,6 @@ class CrawlEngine:
             if seen is not None:
                 self.bloom.add_df(seen, "url")
 
-    def resolve_chains(self, urls: DataFrame) -> DataFrame:
-        """``urls`` plus ``eff_url``, ``hops`` and ``redirect_code``, looked
-        up in the chain closure: a url that does not redirect is its own
-        effective url, with 0 hops and code 0. Adaptive execution plans
-        the join from the runtime sizes (a small closure is broadcast)."""
-        if self.chains is None:
-            return urls.select(
-                "*", F.col("url").alias("eff_url"), F.lit(0).alias("hops"),
-                F.lit(0).alias("redirect_code"),
-            )
-        return urls.join(self.chains, "url", "left").select(
-            *urls.columns,
-            F.coalesce("eff_url", "url").alias("eff_url"),
-            F.coalesce("hops", F.lit(0)).alias("hops"),
-            F.coalesce("redirect_code", F.lit(0)).alias("redirect_code"),
-        )
-
     def _parse_robots(self, rows: DataFrame) -> DataFrame:
         """(host, status, robots_txt) → materialized (host, rules, delay)."""
         exact, ua = self.exact_robots, self.user_agent
@@ -249,20 +230,8 @@ class CrawlEngine:
     # --- seeding (S1 ingest parity: absolute + http only, crawler.cc:1297) ---
     def seed(self, seed_rows: list[tuple[int, str]]) -> int:
         """seed_rows: (seq, url_raw). Returns number of accepted seeds."""
-        spark = self.spark
-        raw = spark.createDataFrame(seed_rows, ["in_seq", "url_raw"])
-        parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
-        norm_udf = F.pandas_udf(normalize_url_series, "string")
-        parsed = (
-            raw.withColumn("p", parts_udf("url_raw"))
-            .filter(F.col("p.valid") & (F.col("p.scheme") == "http"))
-            .withColumn("url", norm_udf("url_raw"))
-            .filter(F.col("url").isNotNull())
-            # host from the NORMALIZED url (the raw-case host is only the
-            # classifier's queueing key; robots/fetch key on normalized)
-            .withColumn("host", parts_udf("url").getField("host"))
-            .select("url", "host", F.col("in_seq"))
-        )
+        raw = self.spark.createDataFrame(seed_rows, ["in_seq", "url_raw"])
+        parsed = parse_seed_lines(raw, "url_raw")
         # classifier never dedups, but frontier-as-set does (engine semantics:
         # identical final docs, deduped fetches — documented divergence);
         # the first arrival of a url keeps its place
@@ -334,17 +303,7 @@ class CrawlEngine:
             "url", F.col("html").cast("string").alias("body")
         )
         locs = sitemap_seeds(robots, pages).select("loc").distinct()
-        parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
-        norm_udf = F.pandas_udf(normalize_url_series, "string")
-        parsed = (
-            locs.withColumn("p", parts_udf("loc"))
-            .filter(F.col("p.valid") & (F.col("p.scheme") == "http"))
-            .withColumn("url", norm_udf("loc"))
-            .filter(F.col("url").isNotNull())
-            .withColumn("host", parts_udf("url").getField("host"))
-            .select("url", "host")
-        )
-        return self.add_seeds(parsed)
+        return self.add_seeds(parse_seed_lines(locs, "loc"))
 
     def run_streaming(
         self, seed_dir: str, checkpoint_dir: str, max_rounds: int = 10,
@@ -518,7 +477,7 @@ class CrawlEngine:
         # 3a. redirect-chain resolution (crawler.cc:52,1094-1096): the
         # content lives at the chain's effective URL; cap/protocol
         # failures become curl-code stubs like every other fetch failure
-        resolved = self.resolve_chains(allowed)
+        resolved = resolve_redirect_chains(allowed, self.chains)
         # 3b. the working set: one row per fetched url, content joined only
         # for chains that resolved; failed chains keep a null html
         pages = self.content_pages.select(

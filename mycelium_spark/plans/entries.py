@@ -451,13 +451,14 @@ def merge_ref_q(spark, sf_dir):
 
 
 # Redirect-chain resolution (crawler.cc:52,862-868): the PRODUCTION
-# resolver (bounded iterative join, operators/redirects.py — the same
-# function CrawlEngine.run_round calls) over deterministic edges derived
+# resolver (chain closure by pointer jumping plus one lookup,
+# operators/redirects.py — the same functions CrawlEngine calls) over
+# deterministic edges derived
 # from doc_ids: every doc_id ≡ 0 (mod 101) is a self-loop (over-cap → 47),
 # every other doc_id with doc_id % 13 < 5 redirects to doc_id + 1 (chains
 # of 1..5 hops, including exactly-at-cap chains; a chain landing on a
 # looping node exceeds the cap). Oracle = DuckDB recursive CTE — an
-# independent closure computation, not an iterative join.
+# independent closure computation, hop by hop.
 _R_URL = (
     "'http://h' || CAST(doc_id % 10 AS VARCHAR) || '.example/p' || "
     "CAST(doc_id AS VARCHAR)"
@@ -493,7 +494,7 @@ def redirect_resolve_q(spark, sf_dir):
     edges = docs.filter(
         (F.col("doc_id") % 101 == 0) | (F.col("doc_id") % 13 < 5)
     ).select(_url(F.col("doc_id")).alias("r_src"), _url(dst_id).alias("r_dst"))
-    out = redirects.resolve_redirect_chains(urls, edges)
+    out = redirects.resolve_redirect_chains(urls, redirects.chain_closure(edges))
     return out.select(
         "doc_id", "eff_url",
         F.col("hops").cast("int").alias("hops"),

@@ -25,7 +25,12 @@ from ..functions.udfs import URL_PARTS_TYPE, normalize_url_series, url_parts_fra
 
 
 def parse_seed_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Line → (url, host) with the S1 ingest filter (absolute http only)."""
+    """Line → (url, host) with the S1 ingest gate (absolute http only,
+    crawler.cc:1297), followed by the input columns other than
+    ``value_col``. The host is taken from the NORMALIZED url (the raw-case
+    host is only the classifier's queueing key; robots and fetch key on
+    the normalized one)."""
+    rest = [c for c in lines.columns if c != value_col]
     parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
     norm_udf = F.pandas_udf(normalize_url_series, "string")
     return (
@@ -34,7 +39,7 @@ def parse_seed_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
         .withColumn("url", norm_udf(F.col(value_col)))
         .filter(F.col("url").isNotNull())
         .withColumn("host", parts_udf("url").getField("host"))
-        .select("url", "host")
+        .select("url", "host", *rest)
     )
 
 

@@ -14,8 +14,9 @@ Every Spark action the engine issues while it reopens and while a round
 runs is attributed to the line of ``plans/crawl.py`` that issued it:
 barrier creation (``localCheckpoint``, whose plan's shuffle stages run
 when it is created under adaptive execution), aggregates (``first``,
-``count``, ``collect``), ``assign_seq``, ``resolve_redirect_chains``,
-``BloomSeen.add_df`` and ``Catalog.commit``. Actions nested inside one of
+``count``, ``collect``), ``assign_seq``, ``chain_closure`` (the round's
+chain lookup runs no action of its own), ``BloomSeen.add_df`` and
+``Catalog.commit``. Actions nested inside one of
 these count towards the outer one. Each gets its own job group, so its
 jobs are counted from Spark's status tracker; jobs that no wrapped action
 issued are listed as ``(other)``. Per phase, the table lists the actions
@@ -179,7 +180,7 @@ def main(argv=None) -> int:
         frame_cls = type(pages)  # the session's concrete DataFrame class
         for attr in ("count", "first", "collect", "toPandas", "localCheckpoint"):
             log.wrap(frame_cls, attr)
-        for attr in ("assign_seq", "resolve_redirect_chains"):
+        for attr in ("assign_seq", "chain_closure"):
             log.wrap(crawl, attr)
         log.wrap(BloomSeen, "add_df", "BloomSeen.add_df")
         log.wrap(Catalog, "commit", "Catalog.commit")

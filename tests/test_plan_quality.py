@@ -116,9 +116,10 @@ def test_span_removal_jvm_splice(spark):
 
 
 def test_redirect_resolver_equi_joins_only(spark):
-    """Chain resolution is ≤6 hash equi-joins on the effective URL —
-    never a nested-loop/cartesian plan, and the per-hop follow UDF is the
-    only Python stage (Arrow-batched, matched rows only)."""
+    """Chain resolution is hash equi-joins on url — the closure's four
+    compositions and the batch lookup — never a nested-loop/cartesian
+    plan, and the edge follow UDF is the only Python stage
+    (Arrow-batched, once per edge)."""
     _, plan = _plan(spark, "redirect_resolve")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -11,14 +11,18 @@
 * the synthetic corpus with with_redirects=True keeps the byte-identity
   invariant through chains, and one of its rounds issues a fixed number
   of Spark jobs;
-* resolution stops hopping once no chain is in flight;
-* the engine's chain closure gives what resolve_redirect_chains gives;
+* the chain closure equals a per-hop walker over the followed edges on
+  seeded edge sets (cycles, self-loops, bad edges at hops 5 and 6,
+  relative Locations, chains of 0-8 hops), in a number of jobs that does
+  not depend on the chain lengths;
+* the engine's closure lookup gives the walker's result;
 * the round's one dedup pass: a url that is both a link and a crawled
   chain target enters seen once and never the frontier; the target of a
   failed chain stays unseen; a target still queued enters seen once.
 """
 
 import datetime
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +31,9 @@ from mycelium_spark.operators.materialize import release
 from mycelium_spark.operators.redirects import (
     CURLE_TOO_MANY_REDIRECTS,
     CURLE_UNSUPPORTED_PROTOCOL,
+    MAXREDIRS,
+    _follow_edges,
+    chain_closure,
     redirect_edges,
     resolve_redirect_chains,
 )
@@ -174,9 +181,27 @@ def _persisted_rdds(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
+def _walk(follow: dict, url: str) -> tuple:
+    """(eff_url, hops, redirect_code) of ``url`` by the per-hop loop over
+    the followed edges ``{r_src: r_next}`` (r_next None at a bad edge)."""
+    eff, hops = url, 0
+    while eff in follow:
+        if hops == MAXREDIRS:
+            return eff, hops, CURLE_TOO_MANY_REDIRECTS
+        if follow[eff] is None:
+            return eff, hops, CURLE_UNSUPPORTED_PROTOCOL
+        eff, hops = follow[eff], hops + 1
+    return eff, hops, 0
+
+
+def _followed(edges) -> dict:
+    return {r["r_src"]: r["r_next"] for r in _follow_edges(edges).collect()}
+
+
 def test_resolver_unit(spark):
-    """resolve_redirect_chains standalone: hop counts and codes. The
-    edges are prepared for the call and released by it."""
+    """chain_closure + resolve_redirect_chains standalone: hop counts and
+    codes. The closure releases its followed edges, and releasing the
+    lookup frees the closure."""
     before = _persisted_rdds(spark)
     urls = spark.createDataFrame(
         [("http://x.example/0",), ("http://plain.example/p",)], "url string"
@@ -188,7 +213,7 @@ def test_resolver_unit(spark):
         ],
         "r_src string, r_dst string",
     )
-    resolved = resolve_redirect_chains(urls, edges)
+    resolved = resolve_redirect_chains(urls, chain_closure(edges))
     out = {r["url"]: r for r in resolved.collect()}
     release(resolved)
     assert _persisted_rdds(spark) <= before
@@ -199,47 +224,108 @@ def test_resolver_unit(spark):
     assert out["http://plain.example/p"]["eff_url"] == "http://plain.example/p"
 
 
-def _resolve_jobs(spark, urls, edges, group):
-    """Resolve under a job group; returns ({url: row}, jobs issued)."""
+def _chain(name: str, n: int, last: str | None = None) -> list[tuple[str, str]]:
+    """n edges http://<name>.example/0 → /1 → ... → /n, odd hops given as
+    relative Locations; ``last`` replaces the Location of the n-th edge."""
+    edges = [
+        (f"http://{name}.example/{i}",
+         f"{i + 1}" if i % 2 else f"http://{name}.example/{i + 1}")
+        for i in range(n)
+    ]
+    if last is not None:
+        edges[-1] = (edges[-1][0], last)
+    return edges
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_chain_closure_matches_walker(spark, seed):
+    """Differential: chain_closure equals the per-hop walker for every url
+    of a seeded random edge set plus fixed chains of 0-8 hops, a bad edge
+    at hop 5 (code 1) and at hop 6 (over the cap: 47, not 1), a 3-cycle
+    and a self-loop."""
+    rng = random.Random(seed)
+    pool = [f"http://r{i % 7}.example/p{i}" for i in range(80)]
+    edges = []
+    for u in pool:
+        if rng.random() < 0.75:
+            x = rng.random()
+            dst = (
+                "ftp://files.example/f" if x < 0.08
+                else u if x < 0.14
+                else f"p{rng.randrange(len(pool))}" if x < 0.3  # relative
+                else rng.choice(pool)
+            )
+            edges.append((u, dst))
+    for n in range(1, 9):
+        edges += _chain(f"len{n}", n)
+    edges += _chain("bad5", 5, "ftp://files.example/5")
+    edges += _chain("bad6", 6, "ftp://files.example/6")
+    edges += [
+        ("http://cyc.example/a", "http://cyc.example/b"),
+        ("http://cyc.example/b", "http://cyc.example/c"),
+        ("http://cyc.example/c", "http://cyc.example/a"),
+        ("http://self.example/x", "http://self.example/x"),
+    ]
+    edf = spark.createDataFrame(edges, "r_src string, r_dst string")
+    starts = sorted({u for u, _ in edges} | set(pool) | {"http://len0.example/0"})
+    urls = spark.createDataFrame([(u,) for u in starts], "url string")
+    resolved = resolve_redirect_chains(urls, chain_closure(edf))
+    try:
+        got = {
+            r["url"]: (r["eff_url"], r["hops"], r["redirect_code"])
+            for r in resolved.collect()
+        }
+    finally:
+        release(resolved)
+    follow = _followed(edf)
+    want = {u: _walk(follow, u) for u in starts}
+    assert got == want
+    assert {h for _, h, _ in want.values()} == set(range(MAXREDIRS + 1))
+    assert {c for _, _, c in want.values()} == {
+        0, CURLE_UNSUPPORTED_PROTOCOL, CURLE_TOO_MANY_REDIRECTS
+    }
+    assert want["http://len0.example/0"] == ("http://len0.example/0", 0, 0)
+    assert want["http://len5.example/0"] == ("http://len5.example/5", 5, 0)
+    assert want["http://len6.example/0"] == (
+        "http://len6.example/5", 5, CURLE_TOO_MANY_REDIRECTS
+    )
+    assert want["http://bad5.example/0"] == (
+        "http://bad5.example/4", 4, CURLE_UNSUPPORTED_PROTOCOL
+    )
+    assert want["http://bad6.example/0"] == (
+        "http://bad6.example/5", 5, CURLE_TOO_MANY_REDIRECTS
+    )
+    assert want["http://cyc.example/a"] == (
+        "http://cyc.example/c", 5, CURLE_TOO_MANY_REDIRECTS
+    )
+
+
+def _closure_jobs(spark, edges, group: str) -> int:
+    """Spark jobs chain_closure runs on ``edges``; the closure is freed."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        out = resolve_redirect_chains(urls, edges)
+        chains = chain_closure(edges)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    rows = {r["url"]: r for r in out.collect()}
-    release(out)
-    return rows, jobs
+    release(chains)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_short_chains_stop_hopping_early(spark):
-    """The hop loop ends once no row is in flight: a batch whose longest
-    chain is one redirect runs fewer hops (so fewer jobs) than a batch
-    holding an over-cap chain, and the results are unchanged. Releasing
-    the results frees every block the calls held."""
+def test_closure_jobs_do_not_follow_chain_length(spark):
+    """Pointer jumping runs a fixed plan: an edge set of 1-hop chains and
+    one holding an over-cap chain take the same number of jobs, at most 7,
+    and leave no persisted RDD once released."""
     before = _persisted_rdds(spark)
-    edges = spark.createDataFrame(
-        [("http://s.example/0", "http://s.example/1")]
-        + [(f"http://l.example/{i}", f"http://l.example/{i + 1}") for i in range(6)],
-        "r_src string, r_dst string",
-    )
+    schema = "r_src string, r_dst string"
     short = spark.createDataFrame(
-        [("http://s.example/0",), ("http://plain.example/p",)], "url string"
+        [(f"http://s.example/{i}", f"http://t.example/{i}") for i in range(4)], schema
     )
-    rows, short_jobs = _resolve_jobs(spark, short, edges, "short-chains")
-    assert rows["http://s.example/0"]["eff_url"] == "http://s.example/1"
-    assert rows["http://s.example/0"]["hops"] == 1
-    assert rows["http://s.example/0"]["redirect_code"] == 0
-    assert rows["http://plain.example/p"]["hops"] == 0
-    long = short.union(spark.createDataFrame([("http://l.example/0",)], "url string"))
-    rows, long_jobs = _resolve_jobs(spark, long, edges, "over-cap-chain")
-    assert rows["http://s.example/0"]["hops"] == 1
-    assert rows["http://l.example/0"]["redirect_code"] == CURLE_TOO_MANY_REDIRECTS
-    assert rows["http://l.example/0"]["eff_url"] == "http://l.example/5"
-    assert rows["http://l.example/0"]["hops"] == 5
-    assert short_jobs < long_jobs
+    long = spark.createDataFrame(_chain("l", 8) + _chain("m", 1), schema)
+    short_jobs = _closure_jobs(spark, short, "closure-short")
+    long_jobs = _closure_jobs(spark, long, "closure-over-cap")
+    assert short_jobs == long_jobs <= 7
     assert _persisted_rdds(spark) <= before
 
 
@@ -306,21 +392,18 @@ def test_refresh_candidates_redirect_aware(spark, chain_pages, crawled):
 
 def test_chain_closure_matches_resolver(spark, chain_pages, crawled):
     """The engine resolves each chain once, in its closure; a lookup in it
-    equals resolve_redirect_chains for every url, redirecting or not."""
+    equals the per-hop walker for every url, redirecting or not."""
     eng, _, _ = crawled
     urls = chain_pages.select("url").union(
         spark.createDataFrame([("http://plain.example/p",)], "url string")
     )
     fields = ("eff_url", "hops", "redirect_code")
     closure = {
-        r["url"]: tuple(r[f] for f in fields) for r in eng.resolve_chains(urls).collect()
+        r["url"]: tuple(r[f] for f in fields)
+        for r in resolve_redirect_chains(urls, eng.chains).collect()
     }
-    resolved = resolve_redirect_chains(urls, redirect_edges(chain_pages))
-    try:
-        direct = {r["url"]: tuple(r[f] for f in fields) for r in resolved.collect()}
-    finally:
-        release(resolved)
-    assert closure == direct
+    follow = _followed(redirect_edges(chain_pages))
+    assert closure == {u: _walk(follow, u) for u in closure}
     assert len(closure) == chain_pages.count() + 1
     assert closure["http://a.example/start"] == ("http://c.example/end", 2, 0)
     assert closure["http://h0.example/r"] == ("http://h5.example/r", 5, 0)
