@@ -1,7 +1,16 @@
-"""URL-seen set: sharded Bloom prefilter + exact anti-join confirm.
+"""URL-seen set: exact anti-join, with an optional sharded Bloom prefilter.
 
-Replaces the reference's Mongo upsert-by-url dedup (Doc.cc:21,79) per the
-north star: a Bloom filter over the seen set is built with JVM-side hashing
+Replaces the reference's Mongo upsert-by-url dedup (Doc.cc:21,79). The
+crawl round (plans/crawl.py) and seeding call ``new_urls(cand, seen,
+None)``: one exact anti-join against the seen set, which the planner
+broadcasts while it is small, and no Python. A Bloom prefilter has no
+false negatives, so in front of the exact confirm it could never change
+the result. ``BloomSeen`` therefore serves the approximate
+``confirm=False`` mode, ``bench.py``'s dedup legs, and
+``CrawlEngine.bloom`` (a filter over the committed seen set that only
+``perfbench/workloads.py`` reads).
+
+A Bloom filter over the seen set is built with JVM-side hashing
 (``xxhash64`` — no Python in the hash path), its set-bit indices are
 aggregated distributed (shuffle scales with DISTINCT BITS, not with the
 bitmap or the set), merged and either broadcast (single shard) or spilled

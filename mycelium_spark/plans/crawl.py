@@ -7,7 +7,7 @@ crawler.cc:860-1064) collapses into deterministic batch rounds:
       scheduled ⟕ broadcast(robots_rules) ──first matching rule──▶ allowed
       allowed ⋈ pages (on normalized url) ──"HEAD+GET"──▶ fetched
       fetched ──content-type + 1 MiB cap──▶ extract UDF ──▶ docs, links
-      links ∖ seen ──Bloom prefilter + exact anti-join──▶ next frontier
+      links ∖ seen ──exact anti-join (seen broadcast)──▶ next frontier
 
 Parity mapping:
 * robots gate: allowed iff no robots row / NOT_AVAILABLE / EPARSE
@@ -32,14 +32,15 @@ effective url, hop count and failure code, by pointer jumping in a fixed
 four joins: operators/redirects.py), so a round resolves its chains with
 one left join. Within a round, each intermediate
 with more than one consumer (the robots-gated schedule, the fetched +
-extracted working set, links, the dedup frame, the new frontier rows,
-``next_frontier``) executes exactly once behind a lazy local checkpoint.
+extracted working set, links, the dedup frame, the new frontier rows)
+executes exactly once behind a lazy local checkpoint.
 The dedup frame is one pass over the link candidates and the redirect
-targets that join the seen set: one frontier anti-join, one Bloom
-prefilter + exact confirm, one host UDF; the new frontier rows and the
-seen extras are both projections of it. The round's stats are read from
-those frames, the commits write from them, and the round releases them
-all before it returns.
+targets that join the seen set: one frontier anti-join, one exact seen
+anti-join, one host UDF; the new frontier rows and the seen extras are
+both projections of it. The round's stats are observed on the commits
+that write those frames (``pyspark.sql.Observation``), so no action
+runs only to count, and the round releases every held frame before it
+returns.
 
 Checkpoint/resume: every table commit is an atomic snapshot (see
 sources/catalog.py); the round counter lives in the frontier table's
@@ -55,10 +56,11 @@ the metrics table every round.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.robots import Robots, RuleType, robots_state_for
@@ -126,6 +128,15 @@ def parse_robots_rows(pdf_iter, exact_match: bool, user_agent: str):
         yield pd.DataFrame({"host": hosts, "rules": rules, "delay": delays}, dtype=object)
 
 
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed by the action that writes it:
+    after that action, ``obs.get["rows"]`` is the number of rows written.
+    The observation goes on top of the written plan: one under a join or
+    union that adaptive execution prunes as empty reports nothing."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 class CrawlEngine:
     """Iterative batch crawler over a pages table (the network replacement)."""
 
@@ -140,9 +151,6 @@ class CrawlEngine:
         per_host_budget: int = 8,
         n_buckets: int = 32,  # unused; kept while perfbench/workloads.py passes it
         exact_robots: bool = True,
-        use_bloom: bool = True,
-        bloom_bits: int = 1 << 22,
-        bloom_shards: int = 1,
         enforce_crawl_delay: bool = False,
         round_period_sec: float = 5.0,
     ):
@@ -174,18 +182,6 @@ class CrawlEngine:
         # one round ≈ one scheduler tick (crawler.cc:335, 5000 ms).
         self.enforce_crawl_delay = enforce_crawl_delay
         self.round_period_sec = round_period_sec
-        # bloom_shards > 1 switches the seen-filter to the sharded build
-        # (per-shard bitmap files under the workdir; the 10^10 design where
-        # a single bitmap can no longer broadcast)
-        self.bloom = (
-            BloomSeen(
-                bloom_bits,
-                n_shards=bloom_shards,
-                shard_dir=f"{workdir}/bloom_shards" if bloom_shards > 1 else None,
-            )
-            if use_bloom
-            else None
-        )
         # robots_rules: parsed + materialized once, broadcast at gate time.
         # Sources, in precedence order:
         #   robots_fixtures — explicit (host, status, robots_txt) rows
@@ -211,11 +207,19 @@ class CrawlEngine:
             self.robots_rules = self._parse_robots(rob_rows)
         else:
             self.robots_rules = None
-        # resume support: rebuild the Bloom from the committed seen table
-        if self.bloom is not None and self.cat.exists("seen"):
-            seen = self.cat.read("seen")
-            if seen is not None:
-                self.bloom.add_df(seen, "url")
+
+    @functools.cached_property
+    def bloom(self) -> BloomSeen:
+        """A Bloom filter over the committed seen set, built on first
+        access. No round reads it: exact dedup is a plain anti-join, and a
+        Bloom prefilter (no false negatives) could never change its
+        result. It is kept for ``perfbench/workloads.py``, which checks it
+        for false negatives after the rounds."""
+        bloom = BloomSeen()
+        seen = self.cat.read("seen")
+        if seen is not None:
+            bloom.add_df(seen, "url")
+        return bloom
 
     def _parse_robots(self, rows: DataFrame) -> DataFrame:
         """(host, status, robots_txt) → materialized (host, rules, delay)."""
@@ -240,15 +244,16 @@ class CrawlEngine:
             F.min(F.struct("in_seq", "host")).alias("a")
         ).select("url", "a.host", "a.in_seq")
         frontier = assign_seq(fresh, ["in_seq"], 0)
+        out, obs = observe_rows(frontier.drop("in_seq"))
         try:
-            n = frontier.count()
             self.cat.commit(
-                "frontier", frontier.drop("in_seq"), mode="overwrite",
-                meta={"round": 0, "next_seq": n, "rows": n},
+                "frontier", out, mode="overwrite",
+                meta=lambda: {"round": 0, "next_seq": obs.get["rows"],
+                              "rows": obs.get["rows"]},
             )
         finally:
             release(frontier)
-        return n
+        return obs.get["rows"]
 
     def add_seeds(self, parsed: DataFrame) -> int:
         """Append already-parsed (url, host) rows to the frontier — the
@@ -260,23 +265,25 @@ class CrawlEngine:
         meta = self.cat.meta("frontier")
         next_seq = int(meta.get("next_seq", 0))
         rnd = int(meta.get("round", 0))
-        existing = self.cat.read("frontier") if self.cat.exists("frontier") else None
+        existing = self.cat.read("frontier")
         cand = parsed.select("url", "host").dropDuplicates(["url"])
         if existing is not None:
             cand = cand.join(existing.select("url"), "url", "left_anti")
         cand = new_urls(cand, self.cat.read("seen"), None, "url")
         fresh = assign_seq(cand, ["url"], next_seq)
+        # the frontier's meta ``rows`` is its row count, so the rows added
+        # are the observed total minus it
+        n_old = int(meta.get("rows", 0))
+        out, obs = observe_rows(fresh if existing is None else existing.unionByName(fresh))
         try:
-            n_new = fresh.count()
-            out = fresh if existing is None else existing.unionByName(fresh)
             self.cat.commit(
                 "frontier", out, mode="overwrite",
-                meta={"round": rnd, "next_seq": next_seq + n_new,
-                      "rows": int(meta.get("rows", 0)) + n_new},
+                meta=lambda: {"round": rnd, "next_seq": next_seq + obs.get["rows"] - n_old,
+                              "rows": obs.get["rows"]},
             )
         finally:
             release(fresh)
-        return n_new
+        return obs.get["rows"] - n_old
 
     def seed_from_sitemaps(self) -> int:
         """Sitemap discovery as a seed source (sitemaps.org protocol —
@@ -419,7 +426,7 @@ class CrawlEngine:
             .join(frontier.select("url"), "url", "left_anti")
         )
         parts_udf = F.pandas_udf(url_parts_frame, URL_PARTS_TYPE)
-        return new_urls(cand, self.cat.read("seen"), self.bloom, "url").withColumn(
+        return new_urls(cand, self.cat.read("seen"), None, "url").withColumn(
             "host", parts_udf("url").getField("host")
         )
 
@@ -440,10 +447,8 @@ class CrawlEngine:
         r = self.round
         meta = self.cat.meta("frontier")
         next_seq = int(meta.get("next_seq", 0))
-        if int(meta.get("rows", -1)) == 0:
-            return {"round": r, "scheduled": 0, "done": True}
-        frontier = self.cat.read("frontier")
-        if frontier is None:
+        frontier = self.cat.read("frontier")  # lazy: the manifest has the schema
+        if frontier is None or meta.get("rows") == 0:
             return {"round": r, "scheduled": 0, "done": True}
 
         def hold(df: DataFrame) -> DataFrame:
@@ -464,12 +469,8 @@ class CrawlEngine:
         else:
             scheduled, deferred = politeness_schedule(frontier, self.per_host_budget)
 
-        # 2. robots gate: one job runs the canon-path UDF and yields both counts
+        # 2. robots gate: the canon-path UDF runs once, behind the hold
         gated = hold(self._robots_gate(scheduled))
-        n_scheduled, n_disallowed = gated.agg(
-            F.count(F.lit(1)), F.sum((~F.col("allowed")).cast("int"))
-        ).first()
-        n_disallowed = n_disallowed or 0
 
         # 3. "fetch": join against pages on normalized url; HEAD folds into
         # column pruning
@@ -514,18 +515,6 @@ class CrawlEngine:
             )
         )
         content = F.col("curl_code") == 0
-        # one job materializes the working set and counts the docs and the
-        # links the links table (step 5) will keep
-        n_docs, n_links = work.agg(
-            F.count(F.lit(1)),
-            F.sum(
-                F.when(
-                    content,
-                    F.size(F.filter("ex.links", lambda l: l["url"].startswith("http:"))),
-                )
-            ),
-        ).first()
-        n_links = n_links or 0
         extracted = work.filter(content)
         # eff_url is stamped only when it differs (crawler.cc:867-868)
         eff_stamp = F.when(
@@ -550,6 +539,11 @@ class CrawlEngine:
                           "meta_index", "meta_follow", "n_warnings")
             ],
         )
+        # the docs commit is the working set's first reader, so one stage
+        # materializes it before links and the dedup pass read it from
+        # concurrent tasks
+        docs, docs_obs = observe_rows(docs)
+        self.cat.commit("docs", docs, mode="append", meta={"round": r})
 
         # 5. links table
         links = hold(
@@ -569,19 +563,18 @@ class CrawlEngine:
             F.col("eff_url").alias("url")
         )
         # held: the range exchange in assign_seq samples its input in a
-        # job of its own, which would re-run the Bloom and host UDFs
+        # job of its own, which would re-run the host UDF
         dedup = hold(self.dedup_candidates(links, targets, frontier))
         new_frontier = assign_seq(
             dedup.filter(~F.col("tgt")).select("url", "host", "src_seq", "pos"),
             ["src_seq", "pos", "url"], next_seq,
         )
         held.append(new_frontier)
-        next_frontier = hold(
+        next_frontier, next_obs = observe_rows(
             deferred.select("url", "host", "seq").unionByName(
                 new_frontier.drop("src_seq", "pos")
             )
         )
-        n_next = next_frontier.count()
 
         # 7. metrics: per-partition lineage (A3/P12)
         part_metrics = (
@@ -597,31 +590,44 @@ class CrawlEngine:
         )
 
         # 8. seen: every scheduled url (disallowed ones too, popped without
-        # fetch) plus the seen extras of the dedup pass
-        new_seen = gated.select("url").unionByName(dedup.filter(F.col("tgt")).select("url"))
-        if self.bloom is not None:
-            self.bloom.add_df(new_seen, "url")
-            # quiescent point for version GC: every frame built against an
-            # older filter version has been materialized above
-            self.bloom.expire(keep=2)
+        # fetch) plus the seen extras of the dedup pass, whose ``allowed``
+        # is null; the write observes the schedule's counts on top
+        seen_obs = Observation()
+        new_seen = (
+            gated.select("url", "allowed")
+            .unionByName(dedup.filter(F.col("tgt")).select("url"), allowMissingColumns=True)
+            .observe(
+                seen_obs,
+                F.count("allowed").alias("scheduled"),
+                F.count(F.when(~F.col("allowed"), 1)).alias("disallowed"),
+            )
+            .select("url")
+        )
 
-        # 9. commit, frontier last: its meta carries the round counter
-        self.cat.commit("docs", docs, mode="append", meta={"round": r})
-        self.cat.commit("links", links.drop("src_seq"), mode="append", meta={"round": r})
+        # 9. commit (docs went first, above), frontier last: its meta
+        # carries the round counter. The round's stats are observed on
+        # these writes.
+        links_out, links_obs = observe_rows(links.drop("src_seq"))
+        self.cat.commit("links", links_out, mode="append", meta={"round": r})
         self.cat.commit("seen", new_seen, mode="append", meta={"round": r})
         self.cat.commit("metrics", part_metrics, mode="append", meta={"round": r})
         self.cat.commit(
             "frontier",
             next_frontier,
             mode="overwrite",
-            meta={"round": r + 1, "next_seq": next_seq + n_next, "rows": n_next},
+            meta=lambda: {
+                "round": r + 1,
+                "next_seq": next_seq + next_obs.get["rows"],
+                "rows": next_obs.get["rows"],
+            },
         )
+        n_next = next_obs.get["rows"]
         return {
             "round": r,
-            "scheduled": n_scheduled,
-            "disallowed": n_disallowed,
-            "docs": n_docs,
-            "links": n_links,
+            "scheduled": seen_obs.get["scheduled"],
+            "disallowed": seen_obs.get["disallowed"],
+            "docs": docs_obs.get["rows"],
+            "links": links_obs.get["rows"],
             "next_frontier": n_next,
             "done": n_next == 0,
         }

@@ -12,7 +12,10 @@ manifest-file snapshots:
 * ``append`` snapshots reference the previous snapshot's directories plus
   the new one — O(1) metadata, no rewrite (Iceberg-style);
 * the crawl round loop commits one snapshot per table per round; resuming
-  reads ``_latest`` and continues from the last committed round.
+  reads ``_latest`` and continues from the last committed round;
+* the manifest records the snapshot's schema and ``read`` hands it to the
+  parquet reader, which otherwise runs a Spark job per read to infer it
+  from the file footers.
 
 Replaces the reference's MongoDB doc store (Doc::save upsert,
 /root/reference/src/common/Doc.cc:15-81) and its filesystem KV store
@@ -25,7 +28,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -54,12 +60,13 @@ class Catalog:
 
     def _publish(
         self, table: str, snap: int, dirs: list[str], meta: dict | None,
-        partition_spec: list[str] | None = None,
+        partition_spec: list[str] | None = None, schema: dict | None = None,
     ) -> None:
         tdir = self._tdir(table)
         manifest = {
             "snapshot": snap, "dirs": dirs, "meta": meta or {},
-            "partition_spec": partition_spec or [], "ts": time.time(),
+            "partition_spec": partition_spec or [], "schema": schema,
+            "ts": time.time(),
         }
         mpath = os.path.join(tdir, f"manifest-{snap}.json")
         tmp = mpath + ".tmp"
@@ -77,12 +84,15 @@ class Catalog:
         table: str,
         df: DataFrame | None,
         mode: str = "append",
-        meta: dict | None = None,
+        meta: dict | Callable[[], dict] | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
         """Write ``df`` as a new snapshot; returns the snapshot id.
 
         ``df=None`` commits a metadata-only snapshot (same data as before).
+        A callable ``meta`` is called after the data write and before the
+        manifest is published, so it can read what the write observed; if
+        the write raises, it is not called and nothing is published.
         ``partition_by`` hive-partitions the snapshot's data directory so
         later reads prune on those columns (e.g. the frontier bucketed by
         host bucket — Iceberg's partition spec analog). The spec is
@@ -97,9 +107,11 @@ class Catalog:
         snap = prev + 1
         spec = list(partition_by or [])
         dirs: list[str] = []
+        schema = None
         if mode == "append" and prev >= 0:
             prev_manifest = self._manifest(table, prev)
             dirs = list(prev_manifest["dirs"])
+            schema = prev_manifest.get("schema")
             prev_spec = prev_manifest.get("partition_spec", [])
             if dirs and spec != prev_spec:
                 raise ValueError(
@@ -113,7 +125,10 @@ class Catalog:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(data_dir)
             dirs.append(data_dir)
-        self._publish(table, snap, dirs, meta, partition_spec=spec)
+            schema = df.schema.jsonValue()
+        if callable(meta):
+            meta = meta()
+        self._publish(table, snap, dirs, meta, partition_spec=spec, schema=schema)
         return snap
 
     # --- maintenance (the Iceberg MERGE/expire analogs) ---
@@ -145,14 +160,9 @@ class Catalog:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        tdir = self._tdir(table)
-        snap = prev + 1
-        data_dir = os.path.join(tdir, f"s{snap}")
-        df.write.mode("overwrite").parquet(data_dir)
         meta = dict(self.meta(table))
         meta["compacted_from"] = prev
-        self._publish(table, snap, [data_dir], meta)
-        return snap
+        return self.commit(table, df, mode="overwrite", meta=meta)
 
     def expire_snapshots(self, table: str, keep: int = 2) -> int:
         """Delete manifests + data dirs unreachable from the newest ``keep``
@@ -190,7 +200,8 @@ class Catalog:
         Partitioned tables with multiple append dirs are read per-dir and
         unioned: Spark's multi-root partition discovery needs a shared
         basePath, and the snapshot dirs (s0, s1, ...) are sibling roots,
-        not partition values."""
+        not partition values. A manifest without a schema (written before
+        manifests carried one) is read with schema inference."""
         snap = self.latest_snapshot(table)
         if snap < 0:
             return None
@@ -198,12 +209,15 @@ class Catalog:
         dirs = manifest["dirs"]
         if not dirs:
             return None
+        reader = self.spark.read
+        if manifest.get("schema"):
+            reader = reader.schema(StructType.fromJson(manifest["schema"]))
         if manifest.get("partition_spec") and len(dirs) > 1:
             from functools import reduce
 
-            parts = [self.spark.read.parquet(d) for d in dirs]
+            parts = [reader.parquet(d) for d in dirs]
             return reduce(lambda a, b: a.unionByName(b), parts)
-        return self.spark.read.parquet(*dirs)
+        return reader.parquet(*dirs)
 
     def meta(self, table: str) -> dict:
         snap = self.latest_snapshot(table)

@@ -15,13 +15,13 @@ runs is attributed to the line of ``plans/crawl.py`` that issued it:
 barrier creation (``localCheckpoint``, whose plan's shuffle stages run
 when it is created under adaptive execution), aggregates (``first``,
 ``count``, ``collect``), ``assign_seq``, ``chain_closure`` (the round's
-chain lookup runs no action of its own), ``BloomSeen.add_df`` and
-``Catalog.commit``. Actions nested inside one of
-these count towards the outer one. Each gets its own job group, so its
-jobs are counted from Spark's status tracker; jobs that no wrapped action
-issued are listed as ``(other)``. Per phase, the table lists the actions
-in execution order with their wall seconds and job counts, then the
-phase's totals.
+chain lookup runs no action of its own) and ``Catalog.commit`` (whose
+writes also yield the round's stats, observed on the written rows).
+Actions nested inside one of these count towards the outer one. Each
+gets its own job group, so its jobs are counted from Spark's status
+tracker; jobs that no wrapped action issued are listed as ``(other)``.
+Per phase, the table lists the actions in execution order with their
+wall seconds and job counts, then the phase's totals.
 """
 
 from __future__ import annotations
@@ -143,7 +143,6 @@ def main(argv=None) -> int:
     spark = harness.spark_session(work, cores, None)
     try:
         import __spark_entry__ as entry
-        from mycelium_spark.operators.seen import BloomSeen
         from mycelium_spark.plans import crawl
         from mycelium_spark.sources import synth
         from mycelium_spark.sources.catalog import Catalog
@@ -182,7 +181,6 @@ def main(argv=None) -> int:
             log.wrap(frame_cls, attr)
         for attr in ("assign_seq", "chain_closure"):
             log.wrap(crawl, attr)
-        log.wrap(BloomSeen, "add_df", "BloomSeen.add_df")
         log.wrap(Catalog, "commit", "Catalog.commit")
         try:
             eng = log.phase("engine init (resume)", engine)

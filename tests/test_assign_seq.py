@@ -81,7 +81,7 @@ def test_seed_seqs_are_dense_in_input_order(spark, tmp_path):
     pages = spark.createDataFrame(
         [], "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    eng = CrawlEngine(spark, str(tmp_path), pages, use_bloom=False)
+    eng = CrawlEngine(spark, str(tmp_path), pages)
     eng.cat.commit(
         "seen", spark.createDataFrame([(u,) for u in seen], "url string"), mode="append"
     )

@@ -4,6 +4,10 @@ the catalog's missing pieces — no Iceberg jar ships in this container,
 so the parquet+manifest stand-in grows the same operations).
 """
 
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from mycelium_spark.sources.catalog import Catalog
@@ -114,3 +118,72 @@ def test_partitioned_append_spec_mismatch_rejected(spark, tmp_path):
     # overwrite with a new spec is allowed (layout replaced, not mixed)
     cat.commit("t", df, mode="overwrite")
     assert cat.read("t").count() == 1
+
+
+def test_callable_meta_runs_after_the_write(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "cm"))
+    cat.commit("t", spark.range(3), mode="append", meta={"n": 3})
+    seen_at_call = {}
+
+    def meta():
+        seen_at_call["data"] = os.path.isdir(str(tmp_path / "cm" / "t" / "s1"))
+        seen_at_call["latest"] = cat.latest_snapshot("t")
+        return {"n": 5}
+
+    assert cat.commit("t", spark.range(2), mode="append", meta=meta) == 1
+    # the data was written and the manifest not yet published
+    assert seen_at_call == {"data": True, "latest": 0}
+    assert cat.meta("t") == {"n": 5}
+    assert cat.read("t").count() == 5
+
+
+def test_callable_meta_skipped_when_the_write_raises(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "cf"))
+    cat.commit("t", spark.range(3), mode="append", meta={"n": 3})
+    boom = F.udf(lambda x: 1 // 0, "long")
+    calls = []
+    with pytest.raises(Exception):
+        cat.commit(
+            "t", spark.range(2).select(boom("id").alias("id")), mode="append",
+            meta=lambda: calls.append(1) or {"n": 5},
+        )
+    assert calls == []
+    assert cat.latest_snapshot("t") == 0
+    assert not os.path.exists(str(tmp_path / "cf" / "t" / "manifest-1.json"))
+    assert cat.meta("t") == {"n": 3}
+    assert cat.read("t").count() == 3
+
+
+def _fields(schema):
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
+def test_read_schema_equals_inferred_for_partitioned_multi_dir(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "ps"))
+    for rnd in range(2):
+        df = spark.range(10).select(
+            F.concat(F.lit("u"), F.col("id")).alias("url"),
+            F.concat(F.lit("b"), F.col("id") % 3).alias("bucket"),
+            F.lit(rnd).alias("round"),
+        )
+        cat.commit("t", df, mode="append", partition_by=["bucket"])
+    dirs = cat._manifest("t", cat.latest_snapshot("t"))["dirs"]
+    assert len(dirs) == 2
+    inferred = spark.read.parquet(dirs[0]).schema
+    assert _fields(cat.read("t").schema) == _fields(inferred)
+    assert cat.read("t").count() == 20
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "ns"))
+    df = spark.createDataFrame([("u1", 0, "a"), ("u2", 1, "b")], ["url", "round", "v"])
+    cat.commit("t", df, mode="overwrite")
+    path = os.path.join(str(tmp_path / "ns"), "t", "manifest-0.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    assert manifest.pop("schema") == df.schema.jsonValue()
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    out = cat.read("t")
+    assert _fields(out.schema) == _fields(spark.read.parquet(*manifest["dirs"]).schema)
+    assert sorted(tuple(r) for r in out.collect()) == [("u1", 0, "a"), ("u2", 1, "b")]

@@ -17,7 +17,7 @@ from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 N_PAGES = 150
-ROUND_JOBS = 26  # jobs of one round of this fixture (test_round_job_count)
+ROUND_JOBS = 17  # jobs of one round of this fixture (test_round_job_count)
 
 
 @pytest.fixture(scope="module")
@@ -31,8 +31,7 @@ def corpus(spark):
 
 def make_engine(spark, tmpdir, pages, robots, **kw):
     return CrawlEngine(
-        spark, str(tmpdir), pages, robots, per_host_budget=4,
-        bloom_bits=1 << 16, **kw,
+        spark, str(tmpdir), pages, robots, per_host_budget=4, **kw,
     )
 
 
@@ -200,3 +199,71 @@ def test_round_job_count(stepped):
     checking that no intermediate is executed twice."""
     _, _, _, jobs = stepped
     assert jobs == ROUND_JOBS
+
+
+def test_bloom_has_no_false_negatives_over_seen(crawled):
+    """``CrawlEngine.bloom``, built from the committed seen set after a
+    multi-round crawl, reports every seen url as maybe-seen."""
+    eng, _, _ = crawled
+    seen = eng.cat.read("seen")
+    assert seen.count() > 0
+    assert eng.bloom.prefilter(seen).filter(~F.col("maybe_seen")).count() == 0
+
+
+@pytest.fixture(scope="module")
+def to_done(spark, corpus, tmp_path_factory):
+    """A crawl run one round at a time until it is done, with the frontier
+    meta, frontier rows and seen rows committed after each round."""
+    pages, robots = corpus
+    eng = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp("w6")), pages, robots, per_host_budget=8
+    )
+    eng.seed(synth.seeds(N_PAGES))
+
+    def state():
+        frontier, seen = eng.cat.read("frontier"), eng.cat.read("seen")
+        return {
+            "meta": eng.cat.meta("frontier"),
+            "frontier": frontier.count() if frontier is not None else 0,
+            "seen": seen.count() if seen is not None else 0,
+        }
+
+    steps = [(None, state())]
+    for _ in range(30):
+        s = eng.run_round()
+        steps.append((s, state()))
+        if s["done"]:
+            break
+    return eng, steps
+
+
+def test_round_stats_equal_committed_tables(to_done):
+    """Each round's stats, observed on its commits, equal what the round
+    committed. The corpus has no redirects, so seen grows by exactly the
+    scheduled urls."""
+    eng, steps = to_done
+    docs = dict(eng.cat.read("docs").groupBy("round").count().collect())
+    links = dict(eng.cat.read("links").groupBy("round").count().collect())
+    assert steps[-1][0]["done"] and len(steps) > 3
+    for (_, before), (s, after) in zip(steps, steps[1:]):
+        r = s["round"]
+        assert s["docs"] == docs.get(r, 0) == s["scheduled"] - s["disallowed"], r
+        assert s["links"] == links.get(r, 0), r
+        assert s["next_frontier"] == after["frontier"] == after["meta"]["rows"], r
+        assert after["meta"]["next_seq"] - before["meta"]["next_seq"] == s["next_frontier"], r
+        assert after["seen"] - before["seen"] == s["scheduled"], r
+        assert after["meta"]["round"] == r + 1
+    assert steps[-1][0]["next_frontier"] == 0 == steps[-1][1]["frontier"]
+
+
+def test_read_schema_equals_inferred(spark, crawled):
+    """The schema a commit records is the one parquet inference would
+    give: same names, types and nullability."""
+    eng, _, _ = crawled
+    for table in ("docs", "links", "seen", "metrics", "frontier"):
+        dirs = eng.cat._manifest(table, eng.cat.latest_snapshot(table))["dirs"]
+        inferred = spark.read.parquet(*dirs).schema
+        got = eng.cat.read(table).schema
+        assert [(f.name, f.dataType, f.nullable) for f in got.fields] == [
+            (f.name, f.dataType, f.nullable) for f in inferred.fields
+        ], table

@@ -97,8 +97,7 @@ def test_docs_latest_and_refresh(spark, tmp_path):
     from mycelium_spark.sources import synth
 
     pages = spark.createDataFrame(synth.pages_pdf(range(40), 40))
-    eng = CrawlEngine(spark, str(tmp_path / "w"), pages, None, per_host_budget=4,
-                      use_bloom=False)
+    eng = CrawlEngine(spark, str(tmp_path / "w"), pages, None, per_host_budget=4)
     eng.seed(synth.seeds(40, n_seeds=8))
     eng.run(max_rounds=2)
     latest = eng.docs_latest()

@@ -41,7 +41,7 @@ from mycelium_spark.plans.crawl import CrawlEngine
 from mycelium_spark.sources import synth
 
 TS = datetime.datetime(2012, 4, 7, 21, 28, 26)
-REDIRECT_ROUND_JOBS = 28  # jobs of round 0 of the synth redirect corpus
+REDIRECT_ROUND_JOBS = 19  # jobs of round 0 of the synth redirect corpus
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string,"
     " redirect_to string"
@@ -99,10 +99,7 @@ def chain_pages(spark):
 
 
 def _run(spark, tmp_path, pages, seed_urls, rounds=3):
-    eng = CrawlEngine(
-        spark, str(tmp_path), pages, per_host_budget=4,
-        bloom_bits=1 << 14,
-    )
+    eng = CrawlEngine(spark, str(tmp_path), pages, per_host_budget=4)
     eng.seed(list(enumerate(seed_urls)))
     eng.run(max_rounds=rounds)
     return eng
@@ -334,10 +331,7 @@ def test_synth_corpus_with_redirects(spark, tmp_path):
     pages = spark.createDataFrame(
         synth.pages_pdf(range(n), n, with_redirects=True), PAGES_SCHEMA
     ).cache()
-    eng = CrawlEngine(
-        spark, str(tmp_path), pages, per_host_budget=4,
-        bloom_bits=1 << 16,
-    )
+    eng = CrawlEngine(spark, str(tmp_path), pages, per_host_budget=4)
     eng.seed(synth.seeds(n))
     sc = spark.sparkContext
     for r in range(5):
@@ -448,7 +442,6 @@ def dedup_rounds(spark, tmp_path_factory):
     pages = spark.createDataFrame(rows, PAGES_SCHEMA).cache()
     eng = CrawlEngine(
         spark, str(tmp_path_factory.mktemp("dedup")), pages, per_host_budget=1,
-        bloom_bits=1 << 14,
     )
     eng.seed(list(enumerate([
         "http://a.example/start", "http://linker.example/p",

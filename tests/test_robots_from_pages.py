@@ -47,8 +47,7 @@ def corpus(spark):
 
 def _run(spark, wd, pages, **kw):
     eng = CrawlEngine(
-        spark, str(wd), pages, per_host_budget=4,
-        bloom_bits=1 << 16, exact_robots=False, **kw,
+        spark, str(wd), pages, per_host_budget=4, exact_robots=False, **kw,
     )
     eng.seed(synth.seeds(N_PAGES))
     eng.run(max_rounds=4)

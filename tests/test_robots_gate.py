@@ -54,7 +54,7 @@ def _engine(spark, tmp_path, exact):
     )
     robots = spark.createDataFrame(ROBOTS, "host string, status int, robots_txt string")
     return CrawlEngine(
-        spark, str(tmp_path / "w"), pages, robots, exact_robots=exact, use_bloom=False,
+        spark, str(tmp_path / "w"), pages, robots, exact_robots=exact,
         enforce_crawl_delay=True,
     )
 
@@ -137,7 +137,7 @@ def test_budgets_follow_crawl_delay(spark, tmp_path):
     )
     pages = spark.createDataFrame([], "url string, html binary, warc_ts string, lang string")
     eng = CrawlEngine(
-        spark, str(tmp_path / "w"), pages, robots, per_host_budget=4, use_bloom=False,
+        spark, str(tmp_path / "w"), pages, robots, per_host_budget=4,
         enforce_crawl_delay=True, round_period_sec=5.0,
     )
     for rnd in (0, 1, 2, 12, 13, 24):

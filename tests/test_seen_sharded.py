@@ -76,31 +76,6 @@ def test_membership_plan_partitions_by_shard(arrow, tmp_path):
     assert "hashpartitioning(_shard" in plan
 
 
-def test_crawl_engine_with_sharded_bloom_matches_default(arrow, tmp_path):
-    """Full engine round loop with bloom_shards=4 produces the same doc/seen
-    sets as the single-shard default (set parity is guaranteed by the exact
-    confirm join; this pins the plumbing end-to-end)."""
-    from mycelium_spark.plans.crawl import CrawlEngine
-    from mycelium_spark.sources import synth
-
-    spark = arrow
-    pages = synth.pages_df(spark, 120, 8)
-    seeds = [(i, synth.url_of(i)) for i in range(15)]
-    results = {}
-    for name, shards in (("single", 1), ("sharded", 4)):
-        eng = CrawlEngine(
-            spark, str(tmp_path / name), pages, per_host_budget=4,
-            bloom_bits=1 << 13, bloom_shards=shards,
-        )
-        eng.seed(list(seeds))
-        eng.run(max_rounds=3)
-        results[name] = {
-            "docs": sorted(r["url"] for r in eng.docs_latest().select("url").collect()),
-            "seen": sorted(r["url"] for r in eng.cat.read("seen").select("url").collect()),
-        }
-    assert results["single"] == results["sharded"]
-
-
 def test_versions_survive_until_expire_and_failed_build_keeps_version(arrow, tmp_path):
     import os
 
@@ -168,23 +143,18 @@ def _scans(node, table_dir: str) -> bool:
     )
 
 
-@pytest.mark.parametrize("shards", [1, 4])
-def test_round_dedup_runs_each_python_udf_once(arrow, tmp_path, shards):
-    """The round's dedup frame evaluates the Bloom membership once (one
-    ArrowEvalPython `member`, or one shard-local MapInPandas) and the host
-    UDF once, and no Python runs on the seen side of any join: the seen
-    scan is never a Bloom input."""
+def test_round_dedup_plan_has_no_bloom(arrow, tmp_path):
+    """The round's dedup frame is an exact anti-join with no Bloom in it:
+    its one Python node is the host UDF (`url_parts_frame`), with no
+    `member` UDF and no shard-local MapInPandas, and no Python runs on the
+    seen side of any join."""
     from mycelium_spark.plans.crawl import CrawlEngine
     from mycelium_spark.sources import synth
 
     spark = arrow
-    eng = CrawlEngine(
-        spark, str(tmp_path / "w"), synth.pages_df(spark, 40, 4), bloom_bits=1 << 13,
-        bloom_shards=shards,
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "w"), synth.pages_df(spark, 40, 4))
     seen = _urls(spark, 0, 300)
     eng.cat.commit("seen", seen, mode="append", meta={"round": 0})
-    eng.bloom.add_df(seen, "url")
     links = _urls(spark, 200, 500).select(
         F.lit("http://src.example/").alias("src"), F.lit(0).alias("src_seq"),
         F.col("url").substr(-3, 3).cast("int").alias("pos"), "url",
@@ -193,13 +163,9 @@ def test_round_dedup_runs_each_python_udf_once(arrow, tmp_path, shards):
     frontier = _urls(spark, 480, 490)
     dedup = eng.dedup_candidates(links, targets, frontier)
     nodes = _plan_nodes(dedup._jdf.queryExecution().optimizedPlan())
-    udfs = [name for n in nodes for name in _udf_names(n)]
-    n_map = sum(_kind(n) == "MapInPandas" for n in nodes)
-    if shards == 1:
-        assert udfs.count("member") == 1 and n_map == 0
-    else:
-        assert "member" not in udfs and n_map == 1
-    assert udfs.count("url_parts_frame") == 1
+    python = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
+    assert [_kind(n) for n in nodes if _kind(n) in python] == ["ArrowEvalPython"]
+    assert [name for n in nodes for name in _udf_names(n)] == ["url_parts_frame"]
     seen_dir = eng.cat.root
     seen_sides = [
         c
@@ -207,7 +173,6 @@ def test_round_dedup_runs_each_python_udf_once(arrow, tmp_path, shards):
         for c in (n.left(), n.right()) if _scans(c, f"{seen_dir}/seen")
     ]
     assert seen_sides
-    python = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
     assert not [n for c in seen_sides for n in _plan_nodes(c) if _kind(n) in python]
     # and the frame is the exact set difference, tagged by origin
     rows = {(r["url"], r["tgt"]) for r in dedup.collect()}

@@ -55,7 +55,7 @@ def test_sitemap_seeding_e2e(spark, corpus, tmp_path):
     pages, content_urls = corpus
     eng = CrawlEngine(
         spark, str(tmp_path), pages, robots_from_pages=True,
-        per_host_budget=8, bloom_bits=1 << 14,
+        per_host_budget=8,
     )
     n = eng.seed_from_sitemaps()
     # 3 content urls + the missing one; the https loc dies at the gate

@@ -176,7 +176,6 @@ def test_run_streaming_with_redirects(spark, tmp_path):
             f.write(synth.url_of(i) + "\n")
     eng = CrawlEngine(
         spark, str(tmp_path / "wd"), pages, per_host_budget=4,
-        bloom_bits=1 << 14,
     )
     q = seed_stream(
         spark, str(seed_dir), lambda df, bid: eng.add_seeds(df),
@@ -229,7 +228,6 @@ def test_run_streaming_two_waves_with_redirects(spark, tmp_path):
             f.write(synth.url_of(i) + "\n")
     eng = CrawlEngine(
         spark, str(tmp_path / "wd"), pages, per_host_budget=100,
-        bloom_bits=1 << 14,
     )
     eng.run_streaming(str(seed_dir), str(tmp_path / "ckpt"), max_rounds=1)
     docs1 = {r["url"]: r for r in eng.cat.read("docs").collect()}
