@@ -143,11 +143,16 @@ def _scans(node, table_dir: str) -> bool:
     )
 
 
-def test_round_dedup_plan_has_no_bloom(arrow, tmp_path):
+@pytest.mark.parametrize("shards", [1, 4])
+def test_round_dedup_runs_each_python_udf_once(arrow, tmp_path, shards):
     """The round's dedup frame is an exact anti-join with no Bloom in it:
     its one Python node is the host UDF (`url_parts_frame`), with no
-    `member` UDF and no shard-local MapInPandas, and no Python runs on the
-    seen side of any join."""
+    `member` UDF and no shard-local MapInPandas. The Bloom-prefiltered
+    `new_urls` (the `bench.py` confirm leg) over the same candidate urls,
+    read as a materialized frame like `bench.py` reads them, evaluates the
+    membership once (one ArrowEvalPython `member`, or one shard-local
+    MapInPandas). In neither plan does Python run on the seen side of any
+    join, and both are the exact set difference."""
     from mycelium_spark.plans.crawl import CrawlEngine
     from mycelium_spark.sources import synth
 
@@ -161,24 +166,48 @@ def test_round_dedup_plan_has_no_bloom(arrow, tmp_path):
     )
     targets = _urls(spark, 450, 520)
     frontier = _urls(spark, 480, 490)
-    dedup = eng.dedup_candidates(links, targets, frontier)
-    nodes = _plan_nodes(dedup._jdf.queryExecution().optimizedPlan())
-    python = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
-    assert [_kind(n) for n in nodes if _kind(n) in python] == ["ArrowEvalPython"]
-    assert [name for n in nodes for name in _udf_names(n)] == ["url_parts_frame"]
-    seen_dir = eng.cat.root
-    seen_sides = [
-        c
-        for n in nodes if _kind(n) == "Join"
-        for c in (n.left(), n.right()) if _scans(c, f"{seen_dir}/seen")
-    ]
-    assert seen_sides
-    assert not [n for c in seen_sides for n in _plan_nodes(c) if _kind(n) in python]
-    # and the frame is the exact set difference, tagged by origin
-    rows = {(r["url"], r["tgt"]) for r in dedup.collect()}
     link_urls = {r["url"] for r in links.collect()}
     target_urls = {r["url"] for r in targets.collect()}
-    known = {r["url"] for r in seen.collect()} | {r["url"] for r in frontier.collect()}
+    seen_urls = {r["url"] for r in seen.collect()}
+    python = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
+    seen_dir = eng.cat.root
+
+    def python_off_seen_side(nodes):
+        seen_sides = [
+            c
+            for n in nodes if _kind(n) == "Join"
+            for c in (n.left(), n.right()) if _scans(c, f"{seen_dir}/seen")
+        ]
+        assert seen_sides
+        assert not [n for c in seen_sides for n in _plan_nodes(c) if _kind(n) in python]
+
+    dedup = eng.dedup_candidates(links, targets, frontier)
+    nodes = _plan_nodes(dedup._jdf.queryExecution().optimizedPlan())
+    assert [_kind(n) for n in nodes if _kind(n) in python] == ["ArrowEvalPython"]
+    assert [name for n in nodes for name in _udf_names(n)] == ["url_parts_frame"]
+    python_off_seen_side(nodes)
+
+    if shards == 1:
+        bloom = eng.bloom  # built over the committed seen set
+    else:
+        bloom = BloomSeen(num_bits=1 << 13, n_shards=shards,
+                          shard_dir=str(tmp_path / "b6"))
+        bloom.add_df(eng.cat.read("seen"), "url")
+    cand = spark.createDataFrame([(u,) for u in sorted(link_urls | target_urls)], "url string")
+    via_bloom = new_urls(cand, eng.cat.read("seen"), bloom, "url")
+    nodes = _plan_nodes(via_bloom._jdf.queryExecution().optimizedPlan())
+    udfs = [name for n in nodes for name in _udf_names(n)]
+    n_map = sum(_kind(n) == "MapInPandas" for n in nodes)
+    if shards == 1:
+        assert udfs == ["member"] and n_map == 0
+    else:
+        assert udfs == [] and n_map == 1
+    python_off_seen_side(nodes)
+
+    # and both frames are the exact set difference, the round's tagged by origin
+    rows = {(r["url"], r["tgt"]) for r in dedup.collect()}
+    known = seen_urls | {r["url"] for r in frontier.collect()}
     assert rows == {
         (u, u in target_urls) for u in (link_urls | target_urls) - known
     }
+    assert {r["url"] for r in via_bloom.collect()} == (link_urls | target_urls) - seen_urls
