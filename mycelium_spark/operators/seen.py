@@ -299,12 +299,17 @@ def new_urls(
 ) -> DataFrame:
     """candidates ∖ seen — Bloom prefilter + exact confirm anti-join.
 
-    The membership UDF (or the shard-local ``mapInPandas`` of a sharded
-    Bloom) is evaluated once per candidate row, inside this call's plan:
-    a caller whose result feeds several consumers materializes the RESULT,
-    not ``candidates``. The exact confirm is one ``left_anti`` join whose
-    condition carries ``maybe_seen``, so Bloom negatives are kept without
-    consulting seen and the UDF never runs over the seen table.
+    When ``candidates`` is a scan or a materialized frame, the membership
+    UDF (or the shard-local ``mapInPandas`` of a sharded Bloom) is
+    evaluated once per candidate row, inside this call's plan: a caller
+    whose result feeds several consumers materializes the RESULT. The
+    exact confirm is one ``left_anti`` join whose condition carries
+    ``maybe_seen``, so Bloom negatives are kept without consulting seen.
+    Over other shapes the optimizer may move the UDF: over an aggregate of
+    a union it pushes the anti-join into each union branch and infers the
+    membership test as a filter on the seen side, so the UDF runs over the
+    seen table too (4 ``member(`` and 2 ``Filter pythonUDF`` in that plan).
+    Materialize such candidates (``localCheckpoint``) before calling.
 
     ``confirm=False`` is the APPROXIMATE at-scale mode: Bloom-maybe rows
     are treated as seen without the confirm join, so the seen table is

@@ -16,8 +16,12 @@ Parity mapping:
   The UA is fixed per engine, so each host reduces to the ordered rules
   of its first matching UA group; the gate is a native first-match over
   that array, fed by one canon-path UDF per scheduled url;
-* the HEAD probe (crawler.cc:1163-1204) disappears: Parquet/Iceberg column
-  pruning reads only the metadata columns until ``html`` is needed (P5);
+* the HEAD probe (crawler.cc:1163-1204) disappears into the fetch join
+  against the engine's fetch table: the content pages projected to the
+  four columns a round reads (``html`` among them), hash-partitioned on
+  url and cached once per engine, so a round neither rescans the
+  ``pages`` files nor shuffles their html (ROADMAP direction 9 records a
+  rejected semi-join prefilter);
 * the 1 MiB content cap (crawler.cc:55,579-583) is a length filter;
 * disallowed URLs are popped without fetch (crawler.cc:1051-1058) — they
   enter the seen set but produce no doc;
@@ -26,11 +30,11 @@ Parity mapping:
   ``row_number() OVER (PARTITION BY url ORDER BY round DESC) = 1`` on read.
 
 Execution: static inputs are prepared once per engine — each host's
-robots rules and Crawl-delay for the engine's UA, and the chain closure
-of the redirect edge table (every redirecting url resolved to its
-effective url, hop count and failure code, by pointer jumping in a fixed
-four joins: operators/redirects.py), so a round resolves its chains with
-one left join. Within a round, each intermediate
+robots rules and Crawl-delay for the engine's UA, the fetch table, and
+the chain closure of the redirect edge table (every redirecting url
+resolved to its effective url, hop count and failure code, by pointer
+jumping in a fixed four joins: operators/redirects.py), so a round
+resolves its chains with one left join. Within a round, each intermediate
 with more than one consumer (the robots-gated schedule, the fetched +
 extracted working set, links, the dedup frame, the new frontier rows)
 executes exactly once behind a lazy local checkpoint.
@@ -48,10 +52,11 @@ snapshot metadata. Kill the driver between rounds and a new engine resumes
 from the last committed round with identical results.
 
 Scale notes (10^10 frontier, 1000 executors): frontier and seen are
-hash-distributed by url; the frontier⋈pages join shuffles on url (AQE
-handles skew) and the extract UDF runs in that partitioning; robots_rules
-and the Crawl-delay budgets broadcast; per-partition lineage rows go to
-the metrics table every round.
+hash-distributed by url; the frontier⋈pages join shuffles the round's
+fetched urls into the fetch table's url partitioning (the cache spills
+to disk when the corpus outgrows memory) and the extract UDF runs in
+that partitioning; robots_rules and the Crawl-delay budgets broadcast;
+per-partition lineage rows go to the metrics table every round.
 """
 
 from __future__ import annotations
@@ -172,6 +177,19 @@ class CrawlEngine:
         else:
             self.chains = None
             self.content_pages = pages
+        # The fetch table: what a round joins its fetched urls against,
+        # hash-partitioned on url and cached, so each round shuffles only
+        # its own urls into it instead of rescanning and reshuffling every
+        # page's html. The cache is keyed by plan, so engines reopened on
+        # the same pages table share one copy.
+        self.fetch_pages = (
+            self.content_pages.select(
+                F.col("url").alias("_page_url"), "warc_ts", "lang", "html"
+            )
+            .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "_page_url")
+            .cache()
+        )
+        self.fetch_pages.count()
         self.user_agent = user_agent
         self.per_host_budget = per_host_budget
         self.exact_robots = exact_robots
@@ -473,7 +491,7 @@ class CrawlEngine:
         gated = hold(self._robots_gate(scheduled))
 
         # 3. "fetch": join against pages on normalized url; HEAD folds into
-        # column pruning
+        # this join
         allowed = gated.filter(F.col("allowed")).drop("allowed")
         # 3a. redirect-chain resolution (crawler.cc:52,1094-1096): the
         # content lives at the chain's effective URL; cap/protocol
@@ -481,9 +499,7 @@ class CrawlEngine:
         resolved = resolve_redirect_chains(allowed, self.chains)
         # 3b. the working set: one row per fetched url, content joined only
         # for chains that resolved; failed chains keep a null html
-        pages = self.content_pages.select(
-            F.col("url").alias("_page_url"), "warc_ts", "lang", "html"
-        )
+        pages = self.fetch_pages
         fetched = resolved.join(
             pages,
             (resolved["eff_url"] == pages["_page_url"])
